@@ -31,14 +31,17 @@ proportional to live subjects, not feed history (README.md:184).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from http_feeds_spark.operators import feed as ops
-from http_feeds_spark.operators import maintenance
 from http_feeds_spark.sources import http_feed
 
 RAW_DIR = "raw"
 CHECKPOINT_DIR = "_checkpoint"
 COMPACTED_DIR = "compacted"
+# how long one AvailableNow catch-up may take before it is stopped and
+# reported as a TimeoutError naming the component
+CATCH_UP_TIMEOUT_S = 240.0
 
 
 def _paths(landing_root: str) -> tuple[str, str, str]:
@@ -50,6 +53,65 @@ def _paths(landing_root: str) -> tuple[str, str, str]:
     )
 
 
+def _feed(spark: SparkSession, url: str, timeout_ms: int | None = None) -> DataFrame:
+    """The feed at `url` as an ``httpfeed`` stream (long-polling when
+    `timeout_ms` is set)."""
+    http_feed.register(spark)
+    reader = spark.readStream.format("httpfeed").option("url", url)
+    if timeout_ms is not None:
+        reader = reader.option("timeout", str(timeout_ms))
+    return reader.load()
+
+
+def _drain(q, label: str) -> None:
+    """Wait for an AvailableNow query to finish; stop it and raise when
+    it overruns :data:`CATCH_UP_TIMEOUT_S`."""
+    if not q.awaitTermination(CATCH_UP_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{label} catch-up did not drain the feed within {CATCH_UP_TIMEOUT_S}s"
+        )
+
+
+def _fold_feed(spark: SparkSession, url: str, root: str, fold, label: str) -> None:
+    """One catch-up of a feed consumer: every micro-batch goes to
+    ``fold(batch_df, batch_id)`` through ``foreachBatch``; the cursor
+    lives in ``<root>/_checkpoint``, so each call resumes where the last
+    one stopped. AvailableNow drains the feed to its current end, then
+    stops. A restart replays at-least-once (README.md:113); every fold
+    here is idempotent per id, which absorbs the redelivery."""
+    q = (
+        _feed(spark, url)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", f"{root}/{CHECKPOINT_DIR}")
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q, label)
+
+
+def _docs(batch_df: DataFrame, doc_id_field: str, text_field: str) -> DataFrame:
+    """(doc_id, text) documents of a batch's payloads; events without
+    both fields (tombstones, other event types) are skipped."""
+    return batch_df.select(
+        F.get_json_object("data", f"$.{doc_id_field}").cast("long").alias("doc_id"),
+        F.get_json_object("data", f"$.{text_field}").alias("text"),
+    ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
+
+
+def _vectors(
+    batch_df: DataFrame, id_field: str, vec_field: str, element: str
+) -> DataFrame:
+    """(vec_id, embedding array<element>) vectors of a batch's payloads;
+    events without both fields are skipped."""
+    return batch_df.select(
+        F.get_json_object("data", f"$.{id_field}").cast("long").alias("vec_id"),
+        F.from_json(
+            F.get_json_object("data", f"$.{vec_field}"), f"array<{element}>"
+        ).alias("embedding"),
+    ).where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
+
+
 def run(
     spark: SparkSession,
     url: str,
@@ -59,7 +121,6 @@ def run(
     catch_up: bool = True,
     compact: bool = False,
     tombstone_horizon_seq: int | None = None,
-    await_s: float = 120.0,
 ):
     """Ingest the feed at `url` into `landing_root`.
 
@@ -75,23 +136,16 @@ def run(
     checkpoint seamlessly.
     """
     raw, ckpt, _ = _paths(landing_root)
-    http_feed.register(spark)
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
-    stream = ops.parse_seq_auto(reader.load())
     writer = (
-        stream.writeStream.format("parquet")
+        ops.parse_seq_auto(_feed(spark, url, timeout_ms))
+        .writeStream.format("parquet")
         .option("path", raw)
         .option("checkpointLocation", ckpt)
     )
     if not catch_up:
         return writer.trigger(processingTime="500 milliseconds").start()
 
-    q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(f"catch-up did not drain the feed within {await_s}s")
+    _drain(writer.trigger(availableNow=True).start(), "landing")
     summary = {"landing_root": landing_root, "raw_rows": _count_or_zero(spark, raw)}
     if compact:
         if summary["raw_rows"] == 0:
@@ -108,67 +162,30 @@ def run_dedup_index(
     url: str,
     index_root: str,
     *,
-    checkpoint: str | None = None,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → streaming near-dup index: the engine's two streaming halves
-    composed. The HTTP feed connector reads CloudEvents; each
-    micro-batch's ``data`` payloads are projected to (doc_id, text)
-    documents and folded into the persistent LSH index
-    (streaming/dedup.fold_batch) via ``foreachBatch`` — "dedup the
-    corpus as it grows from the feed".
+    composed. Each micro-batch's ``data`` payloads are projected to
+    (doc_id, text) documents and folded into the persistent LSH index
+    (streaming/dedup.fold_batch) — "dedup the corpus as it grows from
+    the feed".
 
-    One checkpoint story, same as :func:`run`: the feed cursor lives
-    under ``<index_root>/_checkpoint`` (or ``checkpoint``); a restart
-    resumes mid-stream and replays at-least-once (README.md:113), and
-    fold_batch's per-doc-id idempotence absorbs every redelivery — the
-    exactly-once effect without a transactional sink. AvailableNow
-    drains the feed to its current end then stops; call repeatedly as
-    the feed grows — each run folds only the new events. Events whose
-    payload lacks the document fields (tombstones, other event types)
-    are skipped. Returns {"index_root", "indexed_docs"}."""
-    from pyspark.sql import functions as F
-
-    from http_feeds_spark.stores import parquet_exists
+    Catch-up and redelivery follow :func:`_fold_feed`: the cursor lives
+    under ``<index_root>/_checkpoint``, and fold_batch's per-doc-id
+    idempotence absorbs every redelivery — the exactly-once effect
+    without a transactional sink. Call repeatedly as the feed grows —
+    each run folds only the new events. Returns
+    {"index_root", "indexed_docs"}."""
     from http_feeds_spark.streaming import dedup as sd
 
-    http_feed.register(spark)
     root = index_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = batch_df.select(
-            F.get_json_object("data", f"$.{doc_id_field}")
-            .cast("long")
-            .alias("doc_id"),
-            F.get_json_object("data", f"$.{text_field}").alias("text"),
-        ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-        sd.fold_batch(spark, docs, index_root)
+        sd.fold_batch(spark, _docs(batch_df, doc_id_field, text_field), index_root)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(
-            f"dedup-index catch-up did not drain the feed within {await_s}s"
-        )
-    shingles = f"{root}/{sd.SHINGLES_DIR}"
-    n = (
-        spark.read.parquet(shingles).count()
-        if parquet_exists(spark, shingles)
-        else 0
-    )
+    _fold_feed(spark, url, root, _fold, "dedup-index")
+    n = _count_or_zero(spark, f"{root}/{sd.SHINGLES_DIR}")
     return {"index_root": index_root, "indexed_docs": n}
 
 
@@ -177,19 +194,15 @@ def run_ann_index(
     url: str,
     index_root: str,
     *,
-    checkpoint: str | None = None,
     id_field: str = "vec_id",
     vec_field: str = "embedding",
     k: int = 16,
     iters: int = 2,
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → persisted ANN index: the vector twin of
-    :func:`run_dedup_index`. The HTTP feed connector reads CloudEvents;
-    each micro-batch's ``data`` payloads are projected to
-    (vec_id, embedding) vectors and folded into the persistent IVF index
-    (operators/ann_index.py) via ``foreachBatch`` — "the corpus becomes
+    :func:`run_dedup_index`. Each micro-batch's ``data`` payloads are
+    projected to (vec_id, embedding) vectors and folded into the
+    persistent IVF index (operators/ann_index.py) — "the corpus becomes
     searchable as it arrives from the feed".
 
     Bootstrap-then-upsert: the first non-empty batch against an ABSENT
@@ -200,54 +213,24 @@ def run_ann_index(
     never — see ann_index.upsert_vectors); periodic ``build_index`` over
     the landed corpus is the caller's rebuild policy.
 
-    Crash/redelivery story, same shape as run_dedup_index: the feed
-    cursor lives in the streaming checkpoint; a restart replays
-    at-least-once (README.md:113) and upsert's per-id anti-join guard
-    absorbs every redelivery. The build-vs-upsert branch is re-decided
-    per batch from index PRESENCE, so a redelivered bootstrap batch
-    lands on the upsert path and no-ops. Events whose payload lacks the
-    vector fields (tombstones, other event types) are skipped. Returns
-    {"index_root", "indexed_vectors"}."""
-    from pyspark.sql import functions as F
-
+    Redelivery (see :func:`_fold_feed`): upsert's per-id anti-join guard
+    absorbs it. The build-vs-upsert branch is re-decided per batch from
+    index PRESENCE, so a redelivered bootstrap batch lands on the upsert
+    path and no-ops. Returns {"index_root", "indexed_vectors"}."""
     from http_feeds_spark.operators import ann_index as ai
-    from http_feeds_spark.stores import parquet_exists
 
-    http_feed.register(spark)
     root = index_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        vecs = batch_df.select(
-            F.get_json_object("data", f"$.{id_field}").cast("long").alias("vec_id"),
-            F.from_json(
-                F.get_json_object("data", f"$.{vec_field}"), "array<float>"
-            ).alias("embedding"),
-        ).where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
+        vecs = _vectors(batch_df, id_field, vec_field, "float")
         if vecs.limit(1).count() == 0:
             return  # vector-free batch: never bootstrap an empty quantizer
         if not ai.ensure_index(spark, vecs, index_root, k=k, iters=iters):
             ai.upsert_vectors(spark, vecs, index_root)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(
-            f"ann-index catch-up did not drain the feed within {await_s}s"
-        )
-    corpus = f"{root}/{ai.CORPUS_DIR}"
-    n = spark.read.parquet(corpus).count() if parquet_exists(spark, corpus) else 0
+    _fold_feed(spark, url, root, _fold, "ann-index")
+    n = _count_or_zero(spark, f"{root}/{ai.CORPUS_DIR}")
     return {"index_root": index_root, "indexed_vectors": n}
-
 
 
 def run_media_index(
@@ -255,11 +238,8 @@ def run_media_index(
     url: str,
     media_root: str,
     *,
-    checkpoint: str | None = None,
     doc_id_field: str = "doc_id",
     payload_field: str = "payload_b64",
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → persisted media store: the MEDIA sibling of
     :func:`run_dedup_index` (r13 — the media tier becomes a platform
@@ -271,24 +251,13 @@ def run_media_index(
     metadata row per payload plus pixel-phash rows for decodable images
     and constellation rows for decodable audio.
 
-    Crash/redelivery story, same shape as run_dedup_index: the feed
-    cursor lives in the streaming checkpoint; a restart replays
-    at-least-once (README.md:113) and fold_batch's per-doc-id anti-join
-    absorbs every redelivery — the exactly-once store effect without a
-    transactional sink. Events whose payload lacks the fields
+    Redelivery (see :func:`_fold_feed`): fold_batch's per-doc-id
+    anti-join absorbs it. Events whose payload lacks the fields
     (tombstones, text documents, other event types) are skipped.
     Returns {"index_root", "indexed_docs"}."""
-    from pyspark.sql import functions as F
-
-    from http_feeds_spark.stores import parquet_exists
     from http_feeds_spark.streaming import media as smedia
 
-    http_feed.register(spark)
     root = media_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
         docs = batch_df.select(
@@ -305,20 +274,8 @@ def run_media_index(
         ).where(F.col("doc_id").isNotNull() & F.col("payload").isNotNull())
         smedia.fold_batch(spark, docs, media_root)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(
-            f"media-index catch-up did not drain the feed within {await_s}s"
-        )
-    meta = f"{root}/{smedia.META_DIR}"
-    n = spark.read.parquet(meta).count() if parquet_exists(spark, meta) else 0
+    _fold_feed(spark, url, root, _fold, "media-index")
+    n = _count_or_zero(spark, f"{root}/{smedia.META_DIR}")
     return {"index_root": media_root, "indexed_docs": n}
 
 
@@ -327,11 +284,8 @@ def run_monitor(
     url: str,
     monitor_root: str,
     *,
-    checkpoint: str | None = None,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → continuous corpus monitoring (streaming/monitor.py): each
     micro-batch's document payloads are summarized into the mergeable
@@ -341,36 +295,13 @@ def run_monitor(
     run_dedup_index convention). Drift between any two batch ranges is
     then answerable from the store alone (monitor.js_between), no
     document re-reads. Returns {"monitor_root", "batches", "n_docs"}."""
-    from pyspark.sql import functions as F
-
     from http_feeds_spark.streaming import monitor as mon
 
-    http_feed.register(spark)
-    root = monitor_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.select(
-            F.get_json_object("data", f"$.{doc_id_field}")
-            .cast("long")
-            .alias("doc_id"),
-            F.get_json_object("data", f"$.{text_field}").alias("text"),
-        ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
+        docs = _docs(batch_df, doc_id_field, text_field)
         mon.fold_batch(spark, docs, monitor_root, batch_id)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(f"monitor catch-up did not drain the feed within {await_s}s")
+    _fold_feed(spark, url, monitor_root.rstrip("/"), _fold, "monitor")
     stats = mon.read_stats(spark, monitor_root)
     agg = stats.agg(
         F.count("*").alias("b"), F.coalesce(F.sum("n_docs"), F.lit(0)).alias("d")
@@ -378,72 +309,40 @@ def run_monitor(
     return {"monitor_root": monitor_root, "batches": int(agg.b), "n_docs": int(agg.d)}
 
 
-
 def run_text_index(
     spark: SparkSession,
     url: str,
     index_root: str,
     *,
-    checkpoint: str | None = None,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → persisted inverted index: the lexical twin of
     :func:`run_ann_index` — each micro-batch's document payloads land
     as one posting batch (operators/text_index.upsert_documents), so
     the corpus becomes BM25-searchable as it arrives from the feed.
 
-    Crash/redelivery story: the feed cursor lives in the streaming
-    checkpoint; replays are at-least-once (README.md:113) and the
-    upsert's per-doc-id anti-join guard absorbs every redelivery; a
-    batch torn mid-write has no _SUCCESS marker and is invisible until
-    the retry overwrites it; a crash between batch commit and the
-    derived-store rewrite is healed at search time (text_index module
-    docstring). Bootstrap = build on first documents, upsert after,
-    decided per batch from index presence (the run_ann_index rule).
-    Events whose payload lacks the document fields are skipped.
-    Returns {"index_root", "indexed_docs"}."""
-    from pyspark.sql import functions as F
-
+    Redelivery (see :func:`_fold_feed`): the upsert's per-doc-id
+    anti-join guard absorbs it; a batch torn mid-write has no _SUCCESS
+    marker and is invisible until the retry overwrites it; a crash
+    between batch commit and the derived-store rewrite is healed at
+    search time (text_index module docstring). Bootstrap = build on
+    first documents, upsert after, decided per batch from index presence
+    (the run_ann_index rule). Returns {"index_root", "indexed_docs"}."""
     from http_feeds_spark.operators import text_index as ti
+    from http_feeds_spark.stores import parquet_exists
 
-    http_feed.register(spark)
     root = index_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = batch_df.select(
-            F.get_json_object("data", f"$.{doc_id_field}")
-            .cast("long")
-            .alias("doc_id"),
-            F.get_json_object("data", f"$.{text_field}").alias("text"),
-        ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
+        docs = _docs(batch_df, doc_id_field, text_field)
         if docs.limit(1).count() == 0:
             return
         if not ti.ensure_text_index(spark, docs, index_root):
             ti.upsert_documents(spark, docs, index_root)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(
-            f"text-index catch-up did not drain the feed within {await_s}s"
-        )
-    from http_feeds_spark.operators.text_index import META_DIR
-    from http_feeds_spark.stores import parquet_exists
-
-    meta = f"{root}/{META_DIR}"
+    _fold_feed(spark, url, root, _fold, "text-index")
+    meta = f"{root}/{ti.META_DIR}"
     n = (
         int(spark.read.parquet(meta).collect()[0].n_docs)
         if parquet_exists(spark, meta)
@@ -452,21 +351,17 @@ def run_text_index(
     return {"index_root": index_root, "indexed_docs": n}
 
 
-
 def run_pq_index(
     spark: SparkSession,
     url: str,
     index_root: str,
     *,
-    checkpoint: str | None = None,
     id_field: str = "vec_id",
     vec_field: str = "embedding",
     nlist: int = 16,
     m: int = 4,
     ksub: int = 16,
     iters: int = 2,
-    timeout_ms: int | None = None,
-    await_s: float = 240.0,
 ) -> dict:
     """Feed → persisted IVF+PQ index: the compressed twin of
     :func:`run_ann_index`. Bootstrap trains quantizer + codebooks from
@@ -476,25 +371,12 @@ def run_pq_index(
     drift vs the growing corpus is the documented frozen-model trade;
     rebuild policy is the caller's. Returns
     {"index_root", "indexed_vectors"}."""
-    from pyspark.sql import functions as F
-
     from http_feeds_spark.operators import pq_index as pqi
-    from http_feeds_spark.stores import parquet_exists
 
-    http_feed.register(spark)
     root = index_root.rstrip("/")
-    ckpt = checkpoint or f"{root}/{CHECKPOINT_DIR}"
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        vecs = batch_df.select(
-            F.get_json_object("data", f"$.{id_field}").cast("long").alias("vec_id"),
-            F.from_json(
-                F.get_json_object("data", f"$.{vec_field}"), "array<double>"
-            ).alias("embedding"),
-        ).where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
+        vecs = _vectors(batch_df, id_field, vec_field, "double")
         if vecs.limit(1).count() == 0:
             return
         # validate=False: the bootstrap trains from the FIRST batch of a
@@ -507,20 +389,8 @@ def run_pq_index(
         ):
             pqi.upsert_vectors(spark, vecs, index_root)
 
-    q = (
-        reader.load()
-        .writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(await_s):
-        q.stop()
-        raise TimeoutError(
-            f"pq-index catch-up did not drain the feed within {await_s}s"
-        )
-    codes = f"{root}/{pqi.CODES_DIR}"
-    n = spark.read.parquet(codes).count() if parquet_exists(spark, codes) else 0
+    _fold_feed(spark, url, root, _fold, "pq-index")
+    n = _count_or_zero(spark, f"{root}/{pqi.CODES_DIR}")
     return {"index_root": index_root, "indexed_vectors": n}
 
 
@@ -543,7 +413,7 @@ def run_erasure(
     inverted index, ANN/PQ vector indexes, LSH dedup index — need this
     propagation pass (operators/erasure.py). The erase set is every
     subject whose LATEST feed entry is a DELETE (drop_tombstoned's
-    latest-method test), read through the batch feed connector; subjects
+    latest-method test), read once through the batch feed connector; subjects
     must be (string-encoded) numeric doc ids, the same key the index
     ingests (run_dedup_index et al.) extract from the payload.
 
@@ -565,18 +435,19 @@ def run_erasure(
     covers the DERIVED stores, where targeted physical deletion is
     possible. Returns the per-store counts from propagate_erasure plus
     {"erase_ids": n}."""
-    from pyspark.sql import functions as F
-
     from http_feeds_spark.operators import erasure
 
     http_feed.register(spark)
     events = spark.read.format("httpfeed").option("url", url).load()
     latest = ops.compact(ops.parse_seq_auto(events))
     is_tomb = F.coalesce(F.col("method"), F.lit("PUT")) == F.lit("DELETE")
+    # one walk of the feed: every store's erase_ids and the count below
+    # read this snapshot instead of re-walking HTTP from the start
     ids = (
         latest.where(is_tomb)
         .select(F.col("subject").cast("long").alias("id"))
         .where(F.col("id").isNotNull())
+        .localCheckpoint()
     )
     out = erasure.propagate_erasure(
         spark,
@@ -615,7 +486,6 @@ def run_platform(
     text_field: str = "text",
     vec_field: str = "embedding",
     payload_field: str = "payload_b64",
-    timeout_ms: int | None = None,
     verify: bool = False,
 ) -> dict:
     """The whole document platform in one idempotent catch-up call:
@@ -675,9 +545,7 @@ def run_platform(
     root = platform_root.rstrip("/")
     out: dict = {"platform_root": platform_root}
     if landing:
-        out["landing"] = run(
-            spark, url, f"{root}/landing", compact=compact, timeout_ms=timeout_ms
-        )
+        out["landing"] = run(spark, url, f"{root}/landing", compact=compact)
         if retire_below_seq is not None and out["landing"]["raw_rows"]:
             # the spec's retention story from the one-call API: raw ages
             # out below the caller's horizon (the minimum cursor across
@@ -685,16 +553,14 @@ def run_platform(
             out["landing"]["retention"] = retire_landing_history(
                 spark, f"{root}/landing", horizon_seq=retire_below_seq
             )
-    kw = dict(
-        doc_id_field=doc_id_field, text_field=text_field, timeout_ms=timeout_ms
-    )
+    kw = dict(doc_id_field=doc_id_field, text_field=text_field)
     if text_index:
         out["text_index"] = run_text_index(spark, url, f"{root}/text_index", **kw)
     if dedup_index:
         out["dedup_index"] = run_dedup_index(spark, url, f"{root}/dedup_index", **kw)
     if monitor:
         out["monitor"] = run_monitor(spark, url, f"{root}/monitor", **kw)
-    vkw = dict(id_field=doc_id_field, vec_field=vec_field, timeout_ms=timeout_ms)
+    vkw = dict(id_field=doc_id_field, vec_field=vec_field)
     if ann_index:
         out["ann_index"] = run_ann_index(spark, url, f"{root}/ann_index", **vkw)
     if pq_index:
@@ -706,7 +572,6 @@ def run_platform(
             f"{root}/media_index",
             doc_id_field=doc_id_field,
             payload_field=payload_field,
-            timeout_ms=timeout_ms,
         )
     if erasure:
         out["erasure"] = run_erasure(
@@ -1200,8 +1065,6 @@ def _full_feed(spark: SparkSession, landing_root: str) -> DataFrame:
     event into one survivor. They cannot be duplicated between the two
     sides anyway — retirement itself refuses null seqs, so the
     compacted copy's retired slice is all non-null."""
-    from pyspark.sql import functions as F
-
     raw, _, compacted = _paths(landing_root)
     feed = spark.read.parquet(raw)
     if retention_horizon(spark, landing_root) is not None:
@@ -1247,8 +1110,6 @@ def retire_landing_history(
     would be meaningless there — mint seq at ingest (parse_seq_auto) or
     normalize upstream. Returns {"horizon_seq", "compacted_rows",
     "files_before", "files_after", "rows"} (rows = raw rows kept)."""
-    from pyspark.sql import functions as F
-
     raw, _, _ = _paths(landing_root)
     if (
         spark.read.parquet(raw)
@@ -1331,8 +1192,6 @@ def compact_now(
     the data-loss bug the retention marker exists to prevent).
     """
     raw, _, compacted = _paths(landing_root)
-    from pyspark.sql import functions as F
-
     feed = _full_feed(spark, landing_root)
     if retention_horizon(spark, landing_root) is not None:
         # the plan now READS `compacted` while this rewrite OVERWRITES

@@ -113,13 +113,15 @@ def _manifests(spark: SparkSession, index_root: str) -> list[tuple[int, int, lis
     # job audit): the previous per-generation collect scheduled one job
     # per manifest, making every frontier listing O(generations)
     # scheduled jobs on a long-lived store. The generation comes back
-    # from the file path, so one read answers all of them.
+    # from each file's parent directory (not a path match, which the
+    # index root's own path could also satisfy), so one read answers
+    # all of them.
     rows = (
         spark.read.parquet(*[f"{root}/{g:06d}" for g in sorted(gens)])
         .select(
-            F.regexp_extract(
-                F.input_file_name(), f"/{COMPACTION_DIR}/(\\d+)/", 1
-            ).cast("int").alias("gen"),
+            F.element_at(F.split(F.input_file_name(), "/"), -2)
+            .cast("int")
+            .alias("gen"),
             "new_batch",
             "sources",
         )

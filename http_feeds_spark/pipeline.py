@@ -85,6 +85,21 @@ def _eval_fp_rows(eval_docs: DataFrame) -> DataFrame:
     )
 
 
+def _abandon_checkpoint(future) -> None:
+    """Failure path of an overlapped ``localCheckpoint`` job: cancel it
+    if it has not started, else wait for it and release its blocks now
+    rather than at session end."""
+    if future.cancel():
+        return
+    try:
+        df = future.result()
+    except Exception:
+        return  # the job failed too: nothing was materialized
+    # unpersist() on a checkpointed frame does not reach the
+    # checkpoint's blocks; they belong to the plan's LogicalRDD
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 def _decontaminate_against(
     corpus: DataFrame,
     eval_docs: DataFrame,
@@ -344,15 +359,20 @@ def prepare_training_corpus(
             )
             _eval_pool.shutdown(wait=False)
 
-        toks = tokenized(cur.select("doc_id", "text"))
-        _settled()  # the token checkpoint consumed cur's chain
-        pairs = _near_dup_pairs(cur.select("doc_id", "text"), tokens=toks)
-        losers = (
-            connected_components(pairs, src="a", dst="b")
-            .where(F.col("node") != F.col("component"))
-            .select(F.col("node").alias("doc_id"))
-        )
-        cur = _boundary(cur.join(losers, "doc_id", "left_anti"), "near_dedup")
+        try:
+            toks = tokenized(cur.select("doc_id", "text"))
+            _settled()  # the token checkpoint consumed cur's chain
+            pairs = _near_dup_pairs(cur.select("doc_id", "text"), tokens=toks)
+            losers = (
+                connected_components(pairs, src="a", dst="b")
+                .where(F.col("node") != F.col("component"))
+                .select(F.col("node").alias("doc_id"))
+            )
+            cur = _boundary(cur.join(losers, "doc_id", "left_anti"), "near_dedup")
+        except BaseException:
+            if eval_fps_future is not None:
+                _abandon_checkpoint(eval_fps_future)
+            raise
         if eval_docs is not None:
             corpus_tokens = toks.join(losers, "doc_id", "left_anti")
 

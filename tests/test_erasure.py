@@ -285,6 +285,42 @@ def test_propagate_erasure_all_four_stores(spark, sf_dir, tmp_path):
         )
 
 
+def test_run_erasure_walks_the_feed_once(spark, tmp_path):
+    """run_erasure reads the feed's erase set in ONE walk, however many
+    stores consume it: every store's erase_ids and the summary count
+    read one materialized snapshot, not a fresh HTTP walk each."""
+    from http_feeds_spark import ingest
+    from tests.feed_server import FeedState, serve
+
+    docs = spark.createDataFrame(
+        [(i, f"window filter merge common{i} tail{i} words") for i in range(6)],
+        "doc_id long, text string",
+    )
+    ti_root = str(tmp_path / "ti")
+    sd_root = str(tmp_path / "sd")
+    ti.ensure_text_index(spark, docs, ti_root)
+    sd.fold_batch(spark, docs, sd_root)
+
+    state = FeedState()
+    srv, url = serve(state)
+    try:
+        for i in range(6):
+            state.append("org.example.document", str(i), {"doc_id": i})
+        for i in (2, 4):
+            state.append("org.example.document", str(i), None, method="DELETE")
+        before = state.request_count
+        out = ingest.run_erasure(
+            spark, url, text_index_root=ti_root, dedup_index_root=sd_root
+        )
+        # one walk of an 8-event feed: its only page, then the empty
+        # end-of-feed page
+        assert state.request_count - before == 2
+        assert out["erase_ids"] == 2
+        assert out["text_index_erased"] == 2 and out["dedup_index_erased"] == 2
+    finally:
+        srv.shutdown()
+
+
 @pytest.mark.slow  # >30 s platform-integration (see pytest.ini)
 def test_feed_delete_tombstone_to_erasure_composition(spark, tmp_path):
     """The operational path: documents ingested from the feed into the

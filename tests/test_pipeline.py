@@ -319,3 +319,49 @@ def test_entropy_stage_drops_both_tails(spark, sf_dir):
     # default: no entropy stage anywhere in the report
     base = prepare_training_corpus(spark, corpus, near_dup=False)
     assert "entropy" not in dict(base["report"])
+
+
+def test_near_dup_failure_settles_overlapped_eval_fingerprints(
+    spark, sf_dir, monkeypatch
+):
+    """When the near-dup stage raises, the overlapped eval-fingerprint
+    job is cancelled or awaited (its checkpoint released) before the
+    error propagates, not left running behind it."""
+    import concurrent.futures
+    import time
+
+    import pytest
+
+    from http_feeds_spark import pipeline
+    from http_feeds_spark.queries import llm
+
+    futures = []
+
+    class RecordingPool(concurrent.futures.ThreadPoolExecutor):
+        def submit(self, *a, **kw):
+            futures.append(super().submit(*a, **kw))
+            return futures[-1]
+
+    eval_fp_rows = pipeline._eval_fp_rows
+
+    def slow_eval_fp_rows(eval_docs):
+        time.sleep(3)  # still running when the near-dup stage fails
+        return eval_fp_rows(eval_docs)
+
+    def failing_tokenized(*a, **kw):
+        raise RuntimeError("near-dup stage failed")
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", RecordingPool)
+    monkeypatch.setattr(pipeline, "_eval_fp_rows", slow_eval_fp_rows)
+    monkeypatch.setattr(llm, "tokenized", failing_tokenized)
+    eval_docs = spark.createDataFrame(
+        [(1, "one two three four five six seven eight nine ten")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(RuntimeError, match="near-dup stage failed"):
+        prepare_training_corpus(spark, _docs(spark, sf_dir), eval_docs=eval_docs)
+    assert len(futures) == 1 and futures[0].done()
+    if not futures[0].cancelled():
+        fps = futures[0].result()
+        rdd = fps._jdf.queryExecution().analyzed().rdd()
+        assert not rdd.getStorageLevel().isValid()  # checkpoint released

@@ -760,6 +760,25 @@ def test_ingest_continuous_mode_and_catchup_seam(spark, feed):
         assert raw.select("id").distinct().count() == 4
 
 
+@pytest.mark.parametrize(
+    "component, label", [("run", "landing"), ("run_monitor", "monitor")]
+)
+def test_catch_up_overrun_raises_and_stops_query(
+    spark, feed, tmp_path, monkeypatch, component, label
+):
+    """A catch-up that overruns the module timeout is stopped and
+    reported as a TimeoutError naming the component; no query is left
+    running."""
+    from http_feeds_spark import ingest
+
+    state, url = feed
+    _seed_inventory(state)
+    monkeypatch.setattr(ingest, "CATCH_UP_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match=f"^{label} catch-up did not drain"):
+        getattr(ingest, component)(spark, url, str(tmp_path / label))
+    assert spark.streams.active == []
+
+
 def test_ingest_compact_mints_seq_for_opaque_ids(spark):
     """compact_now falls back to mint_seq when the landed feed carries
     opaque ids (null seq from parse_seq_auto) — the read model still

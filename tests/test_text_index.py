@@ -245,44 +245,46 @@ def test_compact_postings_switch_is_atomic(spark, sf_dir, tmp_path):
     the derived rewrite never ran. The view must ALREADY be switched —
     sources hidden, no posting double-counted — and search must heal the
     stale meta fingerprint to the exact same answers."""
-    docs = _docs(spark, sf_dir)
-    halves = [docs.where(F.col("doc_id") % 2 == i) for i in range(2)]
-    root = str(tmp_path / "ti")
-    ti.build_text_index(spark, halves[0], root)
-    ti.upsert_documents(spark, halves[1], root)
-    before = [tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()]
-    post_path = f"{root}/{ti.POSTINGS_DIR}"
-
-    # simulate: manifest + merged batch land; derived rewrite + vacuum crash
-    merged = spark.read.option("basePath", post_path).parquet(
-        f"{post_path}/batch=000000", f"{post_path}/batch=000001"
-    )
-    spark.createDataFrame(
-        [(2, [0, 1])], "new_batch int, sources array<int>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{root}/{ti.COMPACTION_DIR}/000000"
-    )
-    (
-        merged.select("doc_id", "dl", "term", "tf")
-        .withColumn("bucket", ti._bucket("term"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{post_path}/batch=000002")
-    )
-    # switched: only the merge is visible, sources still on disk
-    assert [no for no, _ in ti._complete_batches(spark, post_path)] == [2]
-    got = [tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()]
-    assert got == before  # heal path: stale n_batches recomputed
-
-    # vacuum removes the hidden sources and the spent manifest
-    assert ti.vacuum_postings(spark, root) >= 2
     import os
 
-    assert not os.path.exists(f"{post_path}/batch=000000")
-    assert not os.path.exists(f"{root}/{ti.COMPACTION_DIR}/000000")
-    assert [
-        tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()
-    ] == before
+    docs = _docs(spark, sf_dir)
+    halves = [docs.where(F.col("doc_id") % 2 == i) for i in range(2)]
+    # the second root's own path holds a /compaction/<n>/ segment: the
+    # manifest generation must come from the file's parent directory
+    for root in (str(tmp_path / "ti"), str(tmp_path / "compaction" / "3" / "ti")):
+        ti.build_text_index(spark, halves[0], root)
+        ti.upsert_documents(spark, halves[1], root)
+        before = [tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()]
+        post_path = f"{root}/{ti.POSTINGS_DIR}"
+
+        # simulate: manifest + merged batch land; derived rewrite + vacuum crash
+        merged = spark.read.option("basePath", post_path).parquet(
+            f"{post_path}/batch=000000", f"{post_path}/batch=000001"
+        )
+        spark.createDataFrame(
+            [(2, [0, 1])], "new_batch int, sources array<int>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/{ti.COMPACTION_DIR}/000000"
+        )
+        (
+            merged.select("doc_id", "dl", "term", "tf")
+            .withColumn("bucket", ti._bucket("term"))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(f"{post_path}/batch=000002")
+        )
+        # switched: only the merge is visible, sources still on disk
+        assert [no for no, _ in ti._complete_batches(spark, post_path)] == [2]
+        got = [tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()]
+        assert got == before  # heal path: stale n_batches recomputed
+
+        # vacuum removes the hidden sources and the spent manifest
+        assert ti.vacuum_postings(spark, root) >= 2
+        assert not os.path.exists(f"{post_path}/batch=000000")
+        assert not os.path.exists(f"{root}/{ti.COMPACTION_DIR}/000000")
+        assert [
+            tuple(r) for r in ti.search(spark, root, TERMS, k=10).collect()
+        ] == before
 
 
 def _phrase_counts_reference(spark, docs, phrase):
