@@ -15,6 +15,9 @@ actually deploys, with ONE checkpoint story:
 - Catch-up uses ``Trigger.AvailableNow``: drain everything the feed holds,
   then stop — the batch-backfill-through-the-streaming-path pattern, so a
   later live run continues from where the backfill ended with no seam.
+  Spark runs AvailableNow as one micro-batch for a Python source, and the
+  connector's read walks the feed to its end, so one catch-up is one
+  batch (up to ``http_feed._READ_MAX_EVENTS`` events).
 - ``seq`` is minted at ingest from the wire id (``parse_seq_auto``:
   composite ``sequence::uuid`` prefix or UUIDv6 timestamp — the spec's two
   sanctioned encodings, README.md:156-159); opaque ids leave seq null and
@@ -74,12 +77,14 @@ def _drain(q, label: str) -> None:
 
 
 def _fold_feed(spark: SparkSession, url: str, root: str, fold, label: str) -> None:
-    """One catch-up of a feed consumer: every micro-batch goes to
+    """One catch-up of a feed consumer: the micro-batch goes to
     ``fold(batch_df, batch_id)`` through ``foreachBatch``; the cursor
     lives in ``<root>/_checkpoint``, so each call resumes where the last
-    one stopped. AvailableNow drains the feed to its current end, then
-    stops. A restart replays at-least-once (README.md:113); every fold
-    here is idempotent per id, which absorbs the redelivery."""
+    one stopped. AvailableNow runs one micro-batch, which holds every
+    page from the cursor to the current feed end (a backlog past
+    ``http_feed._READ_MAX_EVENTS`` events takes more calls). A restart
+    replays at-least-once (README.md:113); every fold here is
+    idempotent per id, which absorbs the redelivery."""
     q = (
         _feed(spark, url)
         .writeStream.foreachBatch(fold)
@@ -102,14 +107,32 @@ def _docs(batch_df: DataFrame, doc_id_field: str, text_field: str) -> DataFrame:
 def _vectors(
     batch_df: DataFrame, id_field: str, vec_field: str, element: str
 ) -> DataFrame:
-    """(vec_id, embedding array<element>) vectors of a batch's payloads;
-    events without both fields are skipped."""
-    return batch_df.select(
+    """(vec_id, embedding array<element>) vectors of a batch's payloads,
+    one per id (:func:`_earliest_per_id`); events without both fields
+    are skipped."""
+    vecs = batch_df.select(
         F.get_json_object("data", f"$.{id_field}").cast("long").alias("vec_id"),
         F.from_json(
             F.get_json_object("data", f"$.{vec_field}"), f"array<{element}>"
         ).alias("embedding"),
     ).where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
+    return _earliest_per_id(vecs, "vec_id")
+
+
+def _earliest_per_id(rows: DataFrame, key: str) -> DataFrame:
+    """One row per `key`: the earliest in feed order. The id-guarded
+    folds keep a stored id's first version and drop later ones; this
+    applies the same rule inside one batch, so the result does not
+    depend on how pages were grouped into batches. The batch is one
+    partition, and ``coalesce(1)`` says so to the planner: the
+    aggregate then needs no shuffle, hence no extra job."""
+    rest = [c for c in rows.columns if c != key]
+    return (
+        rows.withColumn("_pos", F.monotonically_increasing_id())
+        .coalesce(1)
+        .groupBy(key)
+        .agg(*[F.min_by(c, "_pos").alias(c) for c in rest])
+    )
 
 
 def run(
@@ -125,7 +148,9 @@ def run(
     """Ingest the feed at `url` into `landing_root`.
 
     catch_up=True (default): AvailableNow — drain the feed to its current
-    end, stop, optionally compact (``tombstone_horizon_seq`` passes
+    end in one micro-batch (a backlog larger than
+    ``http_feed._READ_MAX_EVENTS`` events takes one call per that many),
+    stop, optionally compact (``tombstone_horizon_seq`` passes
     through to :func:`compact_now` so a rewrite with lagging consumers
     retains their undelivered DELETEs); returns a summary dict. Safe to
     call repeatedly: the shared checkpoint resumes the cursor each time.
@@ -182,7 +207,8 @@ def run_dedup_index(
     root = index_root.rstrip("/")
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        sd.fold_batch(spark, _docs(batch_df, doc_id_field, text_field), index_root)
+        docs = _earliest_per_id(_docs(batch_df, doc_id_field, text_field), "doc_id")
+        sd.fold_batch(spark, docs, index_root)
 
     _fold_feed(spark, url, root, _fold, "dedup-index")
     n = _count_or_zero(spark, f"{root}/{sd.SHINGLES_DIR}")
@@ -272,7 +298,7 @@ def run_media_index(
                 F.get_json_object("data", f"$.{payload_field}"), F.lit("base64")
             ).alias("payload"),
         ).where(F.col("doc_id").isNotNull() & F.col("payload").isNotNull())
-        smedia.fold_batch(spark, docs, media_root)
+        smedia.fold_batch(spark, _earliest_per_id(docs, "doc_id"), media_root)
 
     _fold_feed(spark, url, root, _fold, "media-index")
     n = _count_or_zero(spark, f"{root}/{smedia.META_DIR}")
@@ -335,7 +361,7 @@ def run_text_index(
     root = index_root.rstrip("/")
 
     def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = _docs(batch_df, doc_id_field, text_field)
+        docs = _earliest_per_id(_docs(batch_df, doc_id_field, text_field), "doc_id")
         if docs.limit(1).count() == 0:
             return
         if not ti.ensure_text_index(spark, docs, index_root):

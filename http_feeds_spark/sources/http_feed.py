@@ -15,13 +15,19 @@ Implements the client side of the HTTP Feeds specification
   the Structured Streaming offset, persisted in the checkpoint; delivery
   is at-least-once (README.md:113), matching Spark's semantics exactly.
 
-Streaming: ``SimpleDataSourceStreamReader`` — the driver polls one batch
-per micro-batch trigger (offset = {"lastEventId": ...}). Feed consumption
-is inherently a serial cursor walk (each request needs the previous
-response's last id), so a single-reader poll loop is the correct topology;
-*scale-out happens downstream* — the moment rows land they are repartition-
-distributed for parse/compaction/aggregation across the cluster, and bulk
-bootstrap should replay the Parquet landing zone (A1 batch path), not HTTP.
+Streaming: ``SimpleDataSourceStreamReader`` (offset = {"lastEventId": ...}).
+Each micro-batch walks the feed from the cursor to its end — the spec's
+catch-up, "scroll until the server returns an empty array" — so one
+``Trigger.AvailableNow`` run (which Spark executes as a single batch for
+Python sources) drains the whole backlog, up to :data:`_READ_MAX_EVENTS`
+events per batch. Only the walk's first request carries the long-poll
+``timeout``. Feed consumption is inherently a serial cursor walk (each
+request needs the previous response's last id), so a single-reader poll
+loop is the correct topology; *scale-out happens downstream* — the moment
+rows land they are repartition-distributed for parse/compaction/aggregation
+across the cluster, and bulk bootstrap should replay the Parquet landing
+zone (A1 batch path), not HTTP. Every walk refuses a page that does not
+move past its cursor (:class:`FeedContractError`) instead of looping on it.
 
 Batch: ``DataSourceReader`` paginates the whole feed to its end — intended
 for tests and small bootstraps (one partition; see above).
@@ -31,6 +37,8 @@ No third-party HTTP client: stdlib urllib keeps the source dependency-free.
 
 from __future__ import annotations
 
+import email.utils
+import http.client
 import json
 import time
 import urllib.error
@@ -104,6 +112,39 @@ def _event_to_row(e: dict) -> tuple:
 _PAGE_CACHE: dict[tuple[str, str | None], list[dict]] = {}
 _PAGE_CACHE_MAX = 1024
 
+# Most events one streaming ``read`` lands: the walk stops at the first
+# page that reaches it (so a batch holds at most one page more), which
+# keeps the driver-side micro-batch bounded when a producer outpaces the
+# walk. A larger backlog takes more than one micro-batch.
+_READ_MAX_EVENTS = 100_000
+
+
+class FeedContractError(RuntimeError):
+    """The server broke the scroll contract (README.md:12, :300): a page
+    that does not move past the cursor. ``cursor`` is the lastEventId
+    the page was requested with."""
+
+    def __init__(self, message: str, cursor: str | None):
+        self.cursor = cursor
+        super().__init__(f"{message} (lastEventId={cursor!r})")
+
+
+def _check_advances(cursor: str | None, events: list[dict]) -> None:
+    """Raise :class:`FeedContractError` unless a non-empty page moves
+    past `cursor`: its last id must differ from the cursor, and for
+    composite ids (README.md:159) its first position must lie beyond
+    the cursor's. A walk that accepted such a page would refetch it
+    forever, or land events twice."""
+    if cursor is None:
+        return
+    if events[-1]["id"] == cursor:
+        raise FeedContractError("feed page ends at the cursor it was asked past", cursor)
+    cursor_pos, first_pos = _seq_or_none(cursor), _seq_or_none(events[0]["id"])
+    if cursor_pos is not None and first_pos is not None and first_pos <= cursor_pos:
+        raise FeedContractError(
+            f"feed page starts at position {first_pos}, not past the cursor", cursor
+        )
+
 
 def _cacheable(cache_control: str | None) -> bool:
     """True only when the server granted a positive max-age freshness
@@ -124,15 +165,32 @@ def _cacheable(cache_control: str | None) -> bool:
     return False
 
 
+def _retry_after_s(value: str | None, default: float) -> float:
+    """Seconds a ``Retry-After`` header asks for (delta-seconds or an
+    HTTP-date, RFC 9110 §10.2.3); `default` when absent or unparsable."""
+    if value is None:
+        return default
+    try:
+        return max(0.0, float(value))
+    except ValueError:
+        pass
+    try:
+        return max(0.0, email.utils.parsedate_to_datetime(value).timestamp() - time.time())
+    except (TypeError, ValueError):
+        return default
+
+
 def fetch_batch(url: str, last_event_id: str | None, timeout_ms: int | None,
                 max_wait_s: float = 30.0, use_cache: bool = False,
                 retries: int = 3, backoff_s: float = 0.2) -> list[dict]:
     """One GET against the feed endpoint (README.md:69-82).
 
-    Transient failures (connection resets, timeouts, 5xx) retry with
-    exponential backoff — a GET is idempotent and the cursor protocol is
-    at-least-once (README.md:113), so retrying is always safe. Client
-    errors (4xx) never retry."""
+    Transient failures (connection resets, timeouts, 5xx, torn bodies)
+    retry with exponential backoff — a GET is idempotent and the cursor
+    protocol is at-least-once (README.md:113), so retrying is always
+    safe. A 429 retries after the server's ``Retry-After`` (capped at
+    `max_wait_s`), within the same `retries` budget. Other client errors
+    (4xx) never retry."""
     cache_key = (url, last_event_id)
     if use_cache and cache_key in _PAGE_CACHE:
         return _PAGE_CACHE[cache_key]
@@ -144,19 +202,24 @@ def fetch_batch(url: str, last_event_id: str | None, timeout_ms: int | None,
     full = url + ("?" + urllib.parse.urlencode(params) if params else "")
     req = urllib.request.Request(full, headers={"Accept": "application/cloudevents-batch+json"})
     for attempt in range(retries + 1):
+        wait_s = backoff_s * (2 ** attempt)
         try:
             with urllib.request.urlopen(req, timeout=max_wait_s) as resp:
                 cache_control = resp.headers.get("Cache-Control")
                 body = resp.read()
+            events = json.loads(body)
             break
         except urllib.error.HTTPError as e:
-            if e.code < 500 or attempt == retries:
+            if (e.code != 429 and e.code < 500) or attempt == retries:
                 raise
-        except (urllib.error.URLError, ConnectionError, TimeoutError, OSError):
+            if e.code == 429:
+                wait_s = min(_retry_after_s(e.headers.get("Retry-After"), wait_s), max_wait_s)
+        except (OSError, http.client.IncompleteRead, json.JSONDecodeError):
+            # OSError covers URLError, resets and socket timeouts; the
+            # other two are a body torn in transit
             if attempt == retries:
                 raise
-        time.sleep(backoff_s * (2 ** attempt))
-    events = json.loads(body)
+        time.sleep(wait_s)
     if not isinstance(events, list):
         raise ValueError(f"feed endpoint returned non-array body: {body[:200]!r}")
     if use_cache and events and _cacheable(cache_control):
@@ -166,8 +229,25 @@ def fetch_batch(url: str, last_event_id: str | None, timeout_ms: int | None,
     return events
 
 
+def _pages(url: str, cursor: str | None, timeout_ms: int | None = None,
+           use_cache: bool = False) -> Iterator[list[dict]]:
+    """The feed's pages from `cursor` to its end (the first empty page,
+    README.md:79-82), each checked to move past its cursor. Only the
+    first request carries the long-poll `timeout_ms`: it may wait at the
+    head, and the requests after it return at once."""
+    while events := fetch_batch(url, cursor, timeout_ms, use_cache=use_cache):
+        _check_advances(cursor, events)
+        yield events
+        cursor = events[-1]["id"]
+        timeout_ms = None
+
+
 class HttpFeedStreamReader(SimpleDataSourceStreamReader):
     """Micro-batch reader: offset dict = {"lastEventId": str|None}.
+
+    ``read`` walks from the cursor to the feed end (:func:`_pages`), or
+    until :data:`_READ_MAX_EVENTS` events have landed, and returns the
+    last event's id as the end offset.
 
     Spark persists the returned offset in the streaming checkpoint —
     fulfilling the spec's "client must persist the lastEventId"
@@ -188,12 +268,13 @@ class HttpFeedStreamReader(SimpleDataSourceStreamReader):
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         cursor = start.get("lastEventId")
-        events = fetch_batch(self.url, cursor, self.timeout_ms)
-        if not events:  # empty array = end of feed for now (README.md:82)
-            return iter([]), start
-        rows = [_event_to_row(e) for e in events]
-        next_off = {"lastEventId": events[-1]["id"]}
-        return iter(rows), next_off
+        rows: list[tuple] = []
+        for page in _pages(self.url, cursor, self.timeout_ms):
+            rows.extend(_event_to_row(e) for e in page)
+            cursor = page[-1]["id"]
+            if len(rows) >= _READ_MAX_EVENTS:
+                break
+        return iter(rows), {"lastEventId": cursor}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         # Replay for recovery: walk the cursor from start to end. The
@@ -210,23 +291,18 @@ class HttpFeedStreamReader(SimpleDataSourceStreamReader):
         stop = end.get("lastEventId")
         stop_pos = _seq_or_none(stop)
         out: list[tuple] = []
-        done = cursor == stop
-        while not done:
-            events = fetch_batch(self.url, cursor, None, use_cache=True)
-            if not events:
-                break
-            for e in events:
+        if cursor == stop:
+            return iter(out)
+        for page in _pages(self.url, cursor, use_cache=True):
+            for e in page:
                 pos = _seq_or_none(e["id"])
                 if stop_pos is not None and pos is not None and pos > stop_pos:
-                    done = True
-                    break
+                    return iter(out)
                 out.append(_event_to_row(e))
-                cursor = e["id"]
-                if cursor == stop or (
+                if e["id"] == stop or (
                     stop_pos is not None and pos is not None and pos >= stop_pos
                 ):
-                    done = True
-                    break
+                    return iter(out)
         return iter(out)
 
     def commit(self, end: dict) -> None:
@@ -255,14 +331,9 @@ class HttpFeedBatchReader(DataSourceReader):
         # use_cache: full immutable pages (server-marked Cache-Control,
         # README.md:330-332) are served from the process-local page cache
         # on re-walks, so only the mutable head page re-fetches.
-        cursor = self.start_from
-        while True:
-            events = fetch_batch(self.url, cursor, None, use_cache=True)
-            if not events:
-                return
-            for e in events:
+        for page in _pages(self.url, self.start_from, use_cache=True):
+            for e in page:
                 yield _event_to_row(e)
-            cursor = events[-1]["id"]
 
 
 class HttpFeedDataSource(DataSource):

@@ -42,8 +42,17 @@ class FeedState:
         self.lock = threading.Condition()
         self.events: list[dict] = []
         self.next_seq = 1
-        self.request_count = 0
-        self.fail_next_n = 0  # fault injection: next N GETs return 503
+        self.queries: list[str] = []  # query string of every GET, in order
+        # fault injection, each for the next N GETs: 503; 429 with
+        # Retry-After: throttle_retry_after; a 200 whose body is cut short
+        self.fail_next_n = 0
+        self.throttle_next_n = 0
+        self.throttle_retry_after = "0"
+        self.torn_next_n = 0
+
+    @property
+    def request_count(self) -> int:
+        return len(self.queries)
 
     def append(self, type_: str, subject: str | None, data: dict | None,
                method: str | None = None, time_iso: str | None = None) -> dict:
@@ -99,13 +108,23 @@ class _Handler(BaseHTTPRequestHandler):
 
     def do_GET(self):
         with self.state.lock:
-            self.state.request_count += 1
+            self.state.queries.append(urlparse(self.path).query)
             if self.state.fail_next_n > 0:
                 self.state.fail_next_n -= 1
                 self.send_response(503)
                 self.send_header("Content-Length", "0")
                 self.end_headers()
                 return
+            if self.state.throttle_next_n > 0:
+                self.state.throttle_next_n -= 1
+                self.send_response(429)
+                self.send_header("Retry-After", self.state.throttle_retry_after)
+                self.send_header("Content-Length", "0")
+                self.end_headers()
+                return
+            torn = self.state.torn_next_n > 0
+            if torn:
+                self.state.torn_next_n -= 1
         q = parse_qs(urlparse(self.path).query)
         last = q.get("lastEventId", [None])[0]
         timeout = q.get("timeout", [None])[0]
@@ -114,6 +133,8 @@ class _Handler(BaseHTTPRequestHandler):
         else:
             batch = self.state.batch_after(last, BATCH_SIZE)
         body = json.dumps(batch).encode()
+        if torn:  # a well-framed response carrying half the JSON array
+            body = body[: len(body) // 2]
         self.send_response(200)
         self.send_header("Content-Type", "application/cloudevents-batch+json")
         self.send_header("Content-Length", str(len(body)))

@@ -467,9 +467,12 @@ def test_available_now_bounded_catchup(spark, feed):
     """A8 as a bounded backfill: Trigger.AvailableNow drains everything
     the feed holds at start time and then STOPS on its own — the
     batch-backfill-through-the-streaming-path pattern (same checkpoint,
-    so a later live run resumes where the backfill ended)."""
+    so a later live run resumes where the backfill ended). The feed
+    spans 3 pages (100 per page); one run lands all of them."""
     state, url = feed
     _seed_inventory(state)
+    for i in range(247):
+        state.append("t", f"s{i}", {"v": i}, time_iso="2021-01-01T00:00:01.000000Z")
     from http_feeds_spark.sources import http_feed
 
     http_feed.register(spark)
@@ -483,7 +486,9 @@ def test_available_now_bounded_catchup(spark, feed):
             .start()
         )
         assert q.awaitTermination(60), "AvailableNow query did not self-stop"
-        assert spark.read.parquet(f"{tmp}/out").count() == 3
+        out = spark.read.parquet(f"{tmp}/out")
+        assert out.count() == 250
+        assert out.select("id").distinct().count() == 250
 
 
 def test_incremental_rollup_refresh_equals_batch(spark, sf_dir):
