@@ -1,9 +1,10 @@
 """Platform epochs — cross-store consistent reads for a multi-store
 platform that has NO cross-component transaction by design.
 
-Each store under ``ingest.run_platform`` resumes its own cursor, so a
-reader joining text-index hits against the dedup assignment mid-catch-up
-can see store A at wave N and store B at wave N−1. The classical fix
+Each store under ``ingest.run_platform`` folds the landing zone from its
+own cursor, so a reader joining text-index hits against the dedup
+assignment mid-catch-up can see store A at wave N and store B at wave
+N−1. The classical fix
 without a transaction is the SNAPSHOT TOKEN: after a successful wave the
 platform records every component's read frontier into one committed
 manifest (``<root>/epochs/<n>``), and a reader PINS an epoch — every
@@ -213,7 +214,7 @@ def record_epoch(
                 rec["media_videofp_files"],
             )
         ],
-        "epoch int, text_batches array<int>, monitor_units array<int>, "
+        "epoch int, text_batches array<int>, monitor_units array<bigint>, "
         "dedup_epoch int, landing_batch int, landing_files array<string>, "
         "ann_centroid_files array<string>, ann_corpus_files array<string>, "
         "pq_centroid_files array<string>, pq_codebook_files array<string>, "
@@ -301,7 +302,7 @@ class PlatformEpoch:
             if f"/{mon.MERGED_DIR}/" in p:
                 frames.append(
                     self.spark.read.parquet(p).withColumn(
-                        "batch", F.lit(u).cast("int")
+                        "batch", F.lit(u).cast("long")
                     )
                 )
         out = frames[0]

@@ -1,34 +1,41 @@
 """Orchestrated ingest — the one-call composition of the engine's pieces:
 
-    HTTP feed connector  →  Parquet landing zone  →  compaction  →  read model
+    HTTP feed connector  →  Parquet landing zone  →  folds, compaction,
+                                                      read model
 
 Each piece exists standalone (sources/http_feed.py, operators/maintenance.py,
 operators/feed.py); this module wires them into the pipeline a consumer
-actually deploys, with ONE checkpoint story:
+actually deploys. The platform is ONE consumer of the feed, as a broker
+replacement should be: :func:`run` is its only HTTP reader and only
+streaming query.
 
 - The streaming checkpoint lives under ``<landing_root>/_checkpoint`` and
   holds the feed cursor (the spec's "client must persist the lastEventId",
   /root/reference/README.md:111). Every run — bounded catch-up or live —
   resumes from it; a mid-stream restart replays at-least-once
   (README.md:113) and the parquet sink's commit log makes landing-zone
-  files exactly-once.
-- Catch-up uses ``Trigger.AvailableNow``: drain everything the feed holds,
-  then stop — the batch-backfill-through-the-streaming-path pattern, so a
-  later live run continues from where the backfill ended with no seam.
-  Spark runs AvailableNow as one micro-batch for a Python source, and the
-  connector's read walks the feed to its end, so one catch-up is one
-  batch (up to ``http_feed._READ_MAX_EVENTS`` events).
+  files exactly-once. Catch-up uses ``Trigger.AvailableNow``, which Spark
+  runs as one micro-batch for a Python source; the connector's read walks
+  the feed to its end, so one catch-up is one batch.
 - ``seq`` is minted at ingest from the wire id (``parse_seq_auto``:
   composite ``sequence::uuid`` prefix or UUIDv6 timestamp — the spec's two
   sanctioned encodings, README.md:156-159); opaque ids leave seq null and
   callers fall back to ``operators.feed.mint_seq`` at compaction time.
+- Every derived store folds the landed events after its own cursor — an
+  ``offset_scan`` on ``seq``, which landing compaction and retirement keep
+  verbatim — and commits the highest ``seq`` it folded to
+  ``<store>/_cursor`` only after its store write. A crash in between
+  refolds the same range: the id-guarded folds drop what they hold, and
+  the monitor rewrites the unit keyed by the range's start. A landed
+  null-seq row has no position to keep, so a fold refuses it
+  (:class:`NullSeqError`) before any write.
 
 100 TB posture: the connector is a serial cursor walk by protocol design
 (see sources/http_feed.py) — the landing zone is where scale-out begins.
-Bootstrap of a NEW consumer therefore reads the landing zone (distributed
-parquet scan), never re-walks HTTP; compaction is the periodic maintenance
-rewrite (window per subject, one shuffle) that keeps bootstrap cost
-proportional to live subjects, not feed history (README.md:184).
+Folds, erasure and a new consumer's bootstrap read it (distributed parquet
+scan), never re-walk HTTP; compaction is the periodic maintenance rewrite
+that keeps bootstrap cost proportional to live subjects, not feed history
+(README.md:184).
 """
 
 from __future__ import annotations
@@ -38,13 +45,23 @@ from pyspark.sql import functions as F
 
 from http_feeds_spark.operators import feed as ops
 from http_feeds_spark.sources import http_feed
+from http_feeds_spark.stores import data_file_stats, hadoop_fs, or_none, parquet_exists
 
 RAW_DIR = "raw"
 CHECKPOINT_DIR = "_checkpoint"
 COMPACTED_DIR = "compacted"
+# a fold's cursor: the highest landed seq it has folded
+CURSOR_FILE = "_cursor"
 # how long one AvailableNow catch-up may take before it is stopped and
 # reported as a TimeoutError naming the component
 CATCH_UP_TIMEOUT_S = 240.0
+
+
+class NullSeqError(ValueError):
+    """A fold met landed rows without ``seq``. Their wire ids are opaque,
+    so they carry no position a fold cursor could keep across compaction
+    (README.md:150-159): mint seq at ingest or normalize the feed's ids
+    upstream."""
 
 
 def _paths(landing_root: str) -> tuple[str, str, str]:
@@ -56,14 +73,35 @@ def _paths(landing_root: str) -> tuple[str, str, str]:
     )
 
 
-def _feed(spark: SparkSession, url: str, timeout_ms: int | None = None) -> DataFrame:
-    """The feed at `url` as an ``httpfeed`` stream (long-polling when
-    `timeout_ms` is set)."""
-    http_feed.register(spark)
-    reader = spark.readStream.format("httpfeed").option("url", url)
-    if timeout_ms is not None:
-        reader = reader.option("timeout", str(timeout_ms))
-    return reader.load()
+def _read_text(spark: SparkSession, path: str) -> str | None:
+    """A small file's content through the Hadoop FS; None when absent."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8"
+        )
+    finally:
+        stream.close()
+
+
+def _write_text(spark: SparkSession, path: str, body: str) -> None:
+    """Replace a small file atomically: write a dot-named temp beside it,
+    then rename it over `path` (through the Hadoop FS, so checksum
+    sidecars stay consistent). A filesystem whose rename refuses to
+    replace a file gets delete + rename."""
+    parent, name = path.rstrip("/").rsplit("/", 1)
+    fs, final = hadoop_fs(spark, path)
+    _, tmp = hadoop_fs(spark, f"{parent}/.{name}.tmp")
+    out = fs.create(tmp, True)
+    out.write(bytearray(body.encode("utf-8")))
+    out.close()
+    if not fs.rename(tmp, final):
+        fs.delete(final, False)
+        if not fs.rename(tmp, final):
+            raise IOError(f"could not move {tmp} to {path}")
 
 
 def _drain(q, label: str) -> None:
@@ -76,63 +114,92 @@ def _drain(q, label: str) -> None:
         )
 
 
-def _fold_feed(spark: SparkSession, url: str, root: str, fold, label: str) -> None:
-    """One catch-up of a feed consumer: the micro-batch goes to
-    ``fold(batch_df, batch_id)`` through ``foreachBatch``; the cursor
-    lives in ``<root>/_checkpoint``, so each call resumes where the last
-    one stopped. AvailableNow runs one micro-batch, which holds every
-    page from the cursor to the current feed end (a backlog past
-    ``http_feed._READ_MAX_EVENTS`` events takes more calls). A restart
-    replays at-least-once (README.md:113); every fold here is
-    idempotent per id, which absorbs the redelivery."""
-    q = (
-        _feed(spark, url)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", f"{root}/{CHECKPOINT_DIR}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, label)
+def _uncommitted_batch(spark: SparkSession, ckpt: str) -> bool:
+    """Whether the checkpoint's offset log holds a batch its commit log
+    lacks — a crash between the two writes."""
+    def last(log: str) -> int:
+        fs, p = hadoop_fs(spark, f"{ckpt}/{log}")
+        if not fs.exists(p):
+            return -1
+        names = (st.getPath().getName() for st in fs.listStatus(p))
+        return max((int(n) for n in names if n.isdigit()), default=-1)
+
+    return last("offsets") > last("commits")
 
 
-def _docs(batch_df: DataFrame, doc_id_field: str, text_field: str) -> DataFrame:
-    """(doc_id, text) documents of a batch's payloads; events without
+def _fold_landing(spark: SparkSession, landing_root: str, root: str, fold) -> None:
+    """One catch-up of a derived store at `root`: ``fold(rows, cursor)``
+    gets a snapshot of the events landed after the store's cursor, and
+    the cursor moves to their highest ``seq`` only after ``fold``
+    returns. A crash in between refolds the same range on the next call;
+    every fold here absorbs that (module docstring). Null-seq rows raise
+    :class:`NullSeqError` before ``fold`` runs.
+
+    One job: the snapshot's materialization, which also observes the
+    range's end and its null-seq count. The snapshot is one partition,
+    as a feed micro-batch is, so the folds' per-id reductions plan
+    without a shuffle."""
+    from pyspark.sql import Observation
+
+    feed = or_none(lambda: _full_feed(spark, landing_root))
+    if feed is None:
+        return
+    cursor_path = f"{root}/{CURSOR_FILE}"
+    text = _read_text(spark, cursor_path)
+    cursor = int(text) if text else None
+    rows = ops.offset_scan(feed, cursor)
+    if cursor is not None:  # the range predicate drops null seqs
+        rows = rows.unionByName(feed.where(F.col("seq").isNull()))
+    seen = Observation()
+    nulls = F.count_if(F.col("seq").isNull()).alias("nulls")
+    rows = rows.observe(seen, F.max("seq").alias("hi"), nulls).localCheckpoint().coalesce(1)
+    hi, nulls = seen.get["hi"], seen.get["nulls"]
+    if nulls:
+        raise NullSeqError(
+            f"{nulls} rows landed under {landing_root} have no seq (opaque "
+            "event ids): a fold cursor needs positions — mint seq at ingest "
+            "or normalize the feed's ids upstream"
+        )
+    if hi is None:
+        return
+    fold(rows, cursor)
+    _write_text(spark, cursor_path, str(hi))
+
+
+def _docs(rows: DataFrame, doc_id_field: str, text_field: str) -> DataFrame:
+    """(doc_id, text, seq) documents of landed payloads; events without
     both fields (tombstones, other event types) are skipped."""
-    return batch_df.select(
+    return rows.select(
         F.get_json_object("data", f"$.{doc_id_field}").cast("long").alias("doc_id"),
         F.get_json_object("data", f"$.{text_field}").alias("text"),
+        "seq",
     ).where(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
 
 
 def _vectors(
-    batch_df: DataFrame, id_field: str, vec_field: str, element: str
+    rows: DataFrame, id_field: str, vec_field: str, element: str
 ) -> DataFrame:
-    """(vec_id, embedding array<element>) vectors of a batch's payloads,
-    one per id (:func:`_earliest_per_id`); events without both fields
-    are skipped."""
-    vecs = batch_df.select(
+    """(vec_id, embedding array<element>) vectors of landed payloads, one
+    per id (:func:`_earliest_per_id`); events without both fields are
+    skipped."""
+    vecs = rows.select(
         F.get_json_object("data", f"$.{id_field}").cast("long").alias("vec_id"),
         F.from_json(
             F.get_json_object("data", f"$.{vec_field}"), f"array<{element}>"
         ).alias("embedding"),
+        "seq",
     ).where(F.col("vec_id").isNotNull() & F.col("embedding").isNotNull())
     return _earliest_per_id(vecs, "vec_id")
 
 
 def _earliest_per_id(rows: DataFrame, key: str) -> DataFrame:
-    """One row per `key`: the earliest in feed order. The id-guarded
-    folds keep a stored id's first version and drop later ones; this
-    applies the same rule inside one batch, so the result does not
-    depend on how pages were grouped into batches. The batch is one
-    partition, and ``coalesce(1)`` says so to the planner: the
-    aggregate then needs no shuffle, hence no extra job."""
-    rest = [c for c in rows.columns if c != key]
-    return (
-        rows.withColumn("_pos", F.monotonically_increasing_id())
-        .coalesce(1)
-        .groupBy(key)
-        .agg(*[F.min_by(c, "_pos").alias(c) for c in rest])
-    )
+    """One row per `key`: the earliest landed (lowest ``seq``), without
+    the ``seq`` column. The id-guarded folds keep a stored id's first
+    version and drop later ones; this applies the same rule inside one
+    range, so the result does not depend on how events were grouped
+    into ranges."""
+    rest = [c for c in rows.columns if c not in (key, "seq")]
+    return rows.groupBy(key).agg(*[F.min_by(c, "seq").alias(c) for c in rest])
 
 
 def run(
@@ -161,8 +228,12 @@ def run(
     checkpoint seamlessly.
     """
     raw, ckpt, _ = _paths(landing_root)
+    http_feed.register(spark)
+    reader = spark.readStream.format("httpfeed").option("url", url)
+    if timeout_ms is not None:
+        reader = reader.option("timeout", str(timeout_ms))
     writer = (
-        ops.parse_seq_auto(_feed(spark, url, timeout_ms))
+        ops.parse_seq_auto(reader.load())
         .writeStream.format("parquet")
         .option("path", raw)
         .option("checkpointLocation", ckpt)
@@ -170,7 +241,11 @@ def run(
     if not catch_up:
         return writer.trigger(processingTime="500 milliseconds").start()
 
-    _drain(writer.trigger(availableNow=True).start(), "landing")
+    # after a crash between a batch's offset and commit writes, Spark's
+    # single-batch AvailableNow (its fallback for Python sources) only
+    # re-runs that batch; a second trigger walks on to the feed end
+    for _ in range(1 + _uncommitted_batch(spark, ckpt)):
+        _drain(writer.trigger(availableNow=True).start(), "landing")
     summary = {"landing_root": landing_root, "raw_rows": _count_or_zero(spark, raw)}
     if compact:
         if summary["raw_rows"] == 0:
@@ -184,40 +259,33 @@ def run(
 
 def run_dedup_index(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     index_root: str,
     *,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
 ) -> dict:
-    """Feed → streaming near-dup index: the engine's two streaming halves
-    composed. Each micro-batch's ``data`` payloads are projected to
-    (doc_id, text) documents and folded into the persistent LSH index
+    """Landing zone → near-dup index: the (doc_id, text) documents
+    landed after the index's cursor fold into the persistent LSH index
     (streaming/dedup.fold_batch) — "dedup the corpus as it grows from
-    the feed".
-
-    Catch-up and redelivery follow :func:`_fold_feed`: the cursor lives
-    under ``<index_root>/_checkpoint``, and fold_batch's per-doc-id
-    idempotence absorbs every redelivery — the exactly-once effect
-    without a transactional sink. Call repeatedly as the feed grows —
-    each run folds only the new events. Returns
-    {"index_root", "indexed_docs"}."""
+    the feed". fold_batch's per-doc-id idempotence absorbs a refold
+    (:func:`_fold_landing`). Returns {"index_root", "indexed_docs"}."""
     from http_feeds_spark.streaming import dedup as sd
 
     root = index_root.rstrip("/")
 
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = _earliest_per_id(_docs(batch_df, doc_id_field, text_field), "doc_id")
+    def _fold(rows: DataFrame, _cursor) -> None:
+        docs = _earliest_per_id(_docs(rows, doc_id_field, text_field), "doc_id")
         sd.fold_batch(spark, docs, index_root)
 
-    _fold_feed(spark, url, root, _fold, "dedup-index")
+    _fold_landing(spark, landing_root, root, _fold)
     n = _count_or_zero(spark, f"{root}/{sd.SHINGLES_DIR}")
     return {"index_root": index_root, "indexed_docs": n}
 
 
 def run_ann_index(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     index_root: str,
     *,
     id_field: str = "vec_id",
@@ -225,68 +293,56 @@ def run_ann_index(
     k: int = 16,
     iters: int = 2,
 ) -> dict:
-    """Feed → persisted ANN index: the vector twin of
-    :func:`run_dedup_index`. Each micro-batch's ``data`` payloads are
-    projected to (vec_id, embedding) vectors and folded into the
-    persistent IVF index (operators/ann_index.py) — "the corpus becomes
-    searchable as it arrives from the feed".
+    """Landing zone → persisted ANN index: the vector twin of
+    :func:`run_dedup_index` — the (vec_id, embedding) vectors landed
+    after the index's cursor fold into the IVF index
+    (operators/ann_index.py).
 
-    Bootstrap-then-upsert: the first non-empty batch against an ABSENT
-    index trains the coarse quantizer from itself (build_index — the
-    deterministic Lloyd rounds); every later batch is a frozen-quantizer
-    ``upsert_vectors`` append. Centroid drift vs the growing corpus is
-    the documented upsert trade (recall degrades gracefully, correctness
-    never — see ann_index.upsert_vectors); periodic ``build_index`` over
-    the landed corpus is the caller's rebuild policy.
-
-    Redelivery (see :func:`_fold_feed`): upsert's per-id anti-join guard
-    absorbs it. The build-vs-upsert branch is re-decided per batch from
-    index PRESENCE, so a redelivered bootstrap batch lands on the upsert
-    path and no-ops. Returns {"index_root", "indexed_vectors"}."""
+    Bootstrap-then-upsert: the first non-empty range against an ABSENT
+    index trains the coarse quantizer from itself (build_index); every
+    later range is a frozen-quantizer ``upsert_vectors`` append, whose
+    per-id anti-join absorbs a refold. Centroid drift vs the growing
+    corpus is the documented upsert trade (see ann_index.upsert_vectors);
+    rebuilding is the caller's policy. Returns
+    {"index_root", "indexed_vectors"}."""
     from http_feeds_spark.operators import ann_index as ai
 
     root = index_root.rstrip("/")
 
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        vecs = _vectors(batch_df, id_field, vec_field, "float")
+    def _fold(rows: DataFrame, _cursor) -> None:
+        vecs = _vectors(rows, id_field, vec_field, "float")
         if vecs.limit(1).count() == 0:
-            return  # vector-free batch: never bootstrap an empty quantizer
+            return  # vector-free range: never bootstrap an empty quantizer
         if not ai.ensure_index(spark, vecs, index_root, k=k, iters=iters):
             ai.upsert_vectors(spark, vecs, index_root)
 
-    _fold_feed(spark, url, root, _fold, "ann-index")
+    _fold_landing(spark, landing_root, root, _fold)
     n = _count_or_zero(spark, f"{root}/{ai.CORPUS_DIR}")
     return {"index_root": index_root, "indexed_vectors": n}
 
 
 def run_media_index(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     media_root: str,
     *,
     doc_id_field: str = "doc_id",
     payload_field: str = "payload_b64",
 ) -> dict:
-    """Feed → persisted media store: the MEDIA sibling of
-    :func:`run_dedup_index` (r13 — the media tier becomes a platform
-    citizen). Each micro-batch's ``data`` payloads are projected to
-    (doc_id, payload) binary documents — the payload rides the feed
-    base64-encoded under ``payload_field`` (CloudEvents ``data`` is
-    JSON; base64 is its binary convention) — and folded into the
-    persistent media store (streaming/media.fold_batch): one router
-    metadata row per payload plus pixel-phash rows for decodable images
-    and constellation rows for decodable audio.
-
-    Redelivery (see :func:`_fold_feed`): fold_batch's per-doc-id
-    anti-join absorbs it. Events whose payload lacks the fields
-    (tombstones, text documents, other event types) are skipped.
-    Returns {"index_root", "indexed_docs"}."""
+    """Landing zone → persisted media store: the MEDIA sibling of
+    :func:`run_dedup_index`. The (doc_id, payload) binary documents
+    landed after the store's cursor — the payload rides the feed
+    base64-encoded under ``payload_field`` — fold into the media store
+    (streaming/media.fold_batch): router metadata plus pixel-phash and
+    audio constellation rows for decodable payloads. fold_batch's
+    per-doc-id anti-join absorbs a refold; events without the fields
+    are skipped. Returns {"index_root", "indexed_docs"}."""
     from http_feeds_spark.streaming import media as smedia
 
     root = media_root.rstrip("/")
 
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = batch_df.select(
+    def _fold(rows: DataFrame, _cursor) -> None:
+        docs = rows.select(
             F.get_json_object("data", f"$.{doc_id_field}")
             .cast("long")
             .alias("doc_id"),
@@ -297,37 +353,38 @@ def run_media_index(
             F.try_to_binary(
                 F.get_json_object("data", f"$.{payload_field}"), F.lit("base64")
             ).alias("payload"),
+            "seq",
         ).where(F.col("doc_id").isNotNull() & F.col("payload").isNotNull())
         smedia.fold_batch(spark, _earliest_per_id(docs, "doc_id"), media_root)
 
-    _fold_feed(spark, url, root, _fold, "media-index")
+    _fold_landing(spark, landing_root, root, _fold)
     n = _count_or_zero(spark, f"{root}/{smedia.META_DIR}")
     return {"index_root": media_root, "indexed_docs": n}
 
 
 def run_monitor(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     monitor_root: str,
     *,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
 ) -> dict:
-    """Feed → continuous corpus monitoring (streaming/monitor.py): each
-    micro-batch's document payloads are summarized into the mergeable
-    stats/word-count stores, keyed by the foreachBatch batch id —
-    at-least-once replay rewrites the same batch directories with the
-    same deterministic content (exactly-once store effect, the
-    run_dedup_index convention). Drift between any two batch ranges is
-    then answerable from the store alone (monitor.js_between), no
-    document re-reads. Returns {"monitor_root", "batches", "n_docs"}."""
+    """Landing zone → corpus monitoring (streaming/monitor.py): the
+    documents landed after the monitor's cursor are summarized into the
+    mergeable stats/word-count/sketch stores as one unit. The monitor
+    counts rows, so it is not idempotent per id: the unit is keyed by
+    the cursor the fold started from, and a refold
+    (:func:`_fold_landing`) rewrites the same unit. Drift between unit
+    ranges is answerable from the store alone (monitor.js_between).
+    Returns {"monitor_root", "batches", "n_docs"}."""
     from http_feeds_spark.streaming import monitor as mon
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        docs = _docs(batch_df, doc_id_field, text_field)
-        mon.fold_batch(spark, docs, monitor_root, batch_id)
+    def _fold(rows: DataFrame, cursor: int | None) -> None:
+        unit = 0 if cursor is None else cursor + 1  # first seq the range can hold
+        mon.fold_batch(spark, _docs(rows, doc_id_field, text_field), monitor_root, unit)
 
-    _fold_feed(spark, url, monitor_root.rstrip("/"), _fold, "monitor")
+    _fold_landing(spark, landing_root, monitor_root.rstrip("/"), _fold)
     stats = mon.read_stats(spark, monitor_root)
     agg = stats.agg(
         F.count("*").alias("b"), F.coalesce(F.sum("n_docs"), F.lit(0)).alias("d")
@@ -337,37 +394,30 @@ def run_monitor(
 
 def run_text_index(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     index_root: str,
     *,
     doc_id_field: str = "doc_id",
     text_field: str = "text",
 ) -> dict:
-    """Feed → persisted inverted index: the lexical twin of
-    :func:`run_ann_index` — each micro-batch's document payloads land
-    as one posting batch (operators/text_index.upsert_documents), so
-    the corpus becomes BM25-searchable as it arrives from the feed.
-
-    Redelivery (see :func:`_fold_feed`): the upsert's per-doc-id
-    anti-join guard absorbs it; a batch torn mid-write has no _SUCCESS
-    marker and is invisible until the retry overwrites it; a crash
-    between batch commit and the derived-store rewrite is healed at
-    search time (text_index module docstring). Bootstrap = build on
-    first documents, upsert after, decided per batch from index presence
-    (the run_ann_index rule). Returns {"index_root", "indexed_docs"}."""
+    """Landing zone → persisted inverted index: the documents landed
+    after the index's cursor land as one posting batch
+    (operators/text_index), built on first documents and upserted after,
+    so the corpus becomes BM25-searchable as it arrives. The upsert's
+    per-doc-id anti-join absorbs a refold (:func:`_fold_landing`); a
+    batch torn mid-write has no _SUCCESS marker and stays invisible
+    until the retry overwrites it. Returns {"index_root", "indexed_docs"}."""
     from http_feeds_spark.operators import text_index as ti
-    from http_feeds_spark.stores import parquet_exists
-
     root = index_root.rstrip("/")
 
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        docs = _earliest_per_id(_docs(batch_df, doc_id_field, text_field), "doc_id")
+    def _fold(rows: DataFrame, _cursor) -> None:
+        docs = _earliest_per_id(_docs(rows, doc_id_field, text_field), "doc_id")
         if docs.limit(1).count() == 0:
             return
         if not ti.ensure_text_index(spark, docs, index_root):
             ti.upsert_documents(spark, docs, index_root)
 
-    _fold_feed(spark, url, root, _fold, "text-index")
+    _fold_landing(spark, landing_root, root, _fold)
     meta = f"{root}/{ti.META_DIR}"
     n = (
         int(spark.read.parquet(meta).collect()[0].n_docs)
@@ -379,7 +429,7 @@ def run_text_index(
 
 def run_pq_index(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     index_root: str,
     *,
     id_field: str = "vec_id",
@@ -389,23 +439,20 @@ def run_pq_index(
     ksub: int = 16,
     iters: int = 2,
 ) -> dict:
-    """Feed → persisted IVF+PQ index: the compressed twin of
-    :func:`run_ann_index`. Bootstrap trains quantizer + codebooks from
-    the first non-empty batch (build_pq_index); every later batch is a
-    frozen-model ``pq_index.upsert_vectors`` append (map-only encode,
-    per-id idempotence absorbs at-least-once redelivery). Codebook
-    drift vs the growing corpus is the documented frozen-model trade;
-    rebuild policy is the caller's. Returns
-    {"index_root", "indexed_vectors"}."""
+    """Landing zone → persisted IVF+PQ index: the compressed twin of
+    :func:`run_ann_index` — bootstrap trains quantizer + codebooks from
+    the first non-empty range, every later range is a frozen-model
+    ``pq_index.upsert_vectors`` append whose per-id idempotence absorbs
+    a refold. Returns {"index_root", "indexed_vectors"}."""
     from http_feeds_spark.operators import pq_index as pqi
 
     root = index_root.rstrip("/")
 
-    def _fold(batch_df: DataFrame, _batch_id: int) -> None:
-        vecs = _vectors(batch_df, id_field, vec_field, "double")
+    def _fold(rows: DataFrame, _cursor) -> None:
+        vecs = _vectors(rows, id_field, vec_field, "double")
         if vecs.limit(1).count() == 0:
             return
-        # validate=False: the bootstrap trains from the FIRST batch of a
+        # validate=False: the bootstrap trains from the FIRST range of a
         # growing feed — under-populated codebooks are the documented
         # bootstrap trade there, not the configuration mistake the
         # refuse-loudly gate exists for (pq_index.build_pq_index)
@@ -415,14 +462,14 @@ def run_pq_index(
         ):
             pqi.upsert_vectors(spark, vecs, index_root)
 
-    _fold_feed(spark, url, root, _fold, "pq-index")
+    _fold_landing(spark, landing_root, root, _fold)
     n = _count_or_zero(spark, f"{root}/{pqi.CODES_DIR}")
     return {"index_root": index_root, "indexed_vectors": n}
 
 
 def run_erasure(
     spark: SparkSession,
-    url: str,
+    landing_root: str,
     *,
     text_index_root: str | None = None,
     ann_index_root: str | None = None,
@@ -431,17 +478,16 @@ def run_erasure(
     media_index_root: str | None = None,
     purge: bool = False,
 ) -> dict:
-    """Feed DELETE tombstones → erasure across every derived store.
+    """Landed DELETE tombstones → erasure across every derived store.
 
-    The spec's deletion signal is the tombstone (README.md:270-292): a
-    DELETE entry tells consumers to drop the aggregate. The landing
-    zone honors it via compaction (compact_now); the DERIVED stores —
-    inverted index, ANN/PQ vector indexes, LSH dedup index — need this
-    propagation pass (operators/erasure.py). The erase set is every
-    subject whose LATEST feed entry is a DELETE (drop_tombstoned's
-    latest-method test), read once through the batch feed connector; subjects
-    must be (string-encoded) numeric doc ids, the same key the index
-    ingests (run_dedup_index et al.) extract from the payload.
+    The spec's deletion signal is the tombstone (README.md:270-292). The
+    landing zone honors it via compaction (compact_now); the DERIVED
+    stores need this propagation pass (operators/erasure.py). The erase
+    set is every subject whose LATEST landed entry is a DELETE, read
+    once from the landing zone — so run it before
+    :func:`retire_landing_history` ages a DELETE out of raw. Subjects
+    must be (string-encoded) numeric doc ids, the key the folds extract
+    from the payload.
 
     ``purge=False`` commits logical erasure only — from that commit, no
     erased id can surface from any store read (each read path anti-joins
@@ -450,31 +496,27 @@ def run_erasure(
     same erase set; already-recorded ids are dropped by erase_ids and an
     already-purged store has no affected partitions.
 
-    Landing-zone scope: the RAW landing zone is a parquet STREAMING sink
-    — its ``_spark_metadata`` commit log owns file visibility, so an
-    in-place rewrite would orphan the log (the next micro-batch would
-    re-create it listing only new files, hiding the retained history
-    from every log-aware read). Its erasure story is therefore the
-    spec's own (README.md:184, :270-292): serve from the COMPACTED copy
-    (``compact_now`` — a deleted subject's content never enters it) and
-    age raw files out wholesale on a retention window; this function
-    covers the DERIVED stores, where targeted physical deletion is
-    possible. Returns the per-store counts from propagate_erasure plus
-    {"erase_ids": n}."""
+    The RAW landing zone is a streaming sink whose commit log owns file
+    visibility, so it is not rewritten here: a deleted subject's content
+    never enters the compacted copy, and raw ages out wholesale by
+    retention (README.md:184). Returns the per-store counts from
+    propagate_erasure plus {"erase_ids": n}."""
     from http_feeds_spark.operators import erasure
 
-    http_feed.register(spark)
-    events = spark.read.format("httpfeed").option("url", url).load()
-    latest = ops.compact(ops.parse_seq_auto(events))
-    is_tomb = F.coalesce(F.col("method"), F.lit("PUT")) == F.lit("DELETE")
-    # one walk of the feed: every store's erase_ids and the count below
-    # read this snapshot instead of re-walking HTTP from the start
-    ids = (
-        latest.where(is_tomb)
-        .select(F.col("subject").cast("long").alias("id"))
-        .where(F.col("id").isNotNull())
-        .localCheckpoint()
-    )
+    feed = or_none(lambda: _full_feed(spark, landing_root))
+    if feed is None:
+        ids = spark.createDataFrame([], "id long")
+    else:
+        is_tomb = F.coalesce(F.col("method"), F.lit("PUT")) == F.lit("DELETE")
+        # one snapshot: every store's erase_ids and the count below read
+        # it instead of recompacting the landing zone
+        ids = (
+            ops.compact(feed)
+            .where(is_tomb)
+            .select(F.col("subject").cast("long").alias("id"))
+            .where(F.col("id").isNotNull())
+            .localCheckpoint()
+        )
     out = erasure.propagate_erasure(
         spark,
         ids,
@@ -517,84 +559,57 @@ def run_platform(
     """The whole document platform in one idempotent catch-up call:
 
         feed → landing zone (+ compaction honoring tombstones)
-             → text index fold        (run_text_index)
-             → LSH dedup index fold   (run_dedup_index)
-             → corpus monitor fold    (run_monitor)
-             → [ANN / PQ vector index folds, when the feed carries an
-                embedding field — run_ann_index / run_pq_index]
-             → [media store fold, when the feed carries binary payloads
-                (base64 under ``payload_field``) — run_media_index
-                (r13): router metadata + pixel-phash + audio
-                constellation rows per micro-batch]
-             → erasure propagation    (run_erasure — DELETE tombstones
-               logically erased everywhere, physically purged when
-               ``purge``)
+             → folds of the landing zone: text index, LSH dedup index,
+               corpus monitor, and optionally the ANN / PQ vector
+               indexes and the media store (base64 under
+               ``payload_field``)
+             → erasure propagation (DELETE tombstones logically erased
+               everywhere, physically purged when ``purge``)
 
-    Each component keeps its own store + checkpoint under
+    The landing catch-up is the wave's only HTTP walk and only streaming
+    query (``landing=False`` skips it; the folds then read a landing zone
+    another process keeps at ``<platform_root>/landing``). Each other
+    component keeps its own store + landed-``seq`` cursor under
     ``<platform_root>/<name>`` and is individually idempotent (per-id
-    guards, batch-dir overwrites, snapshot-cleared ledgers), so the
-    composition is too: re-running after ANY partial failure resumes
-    each component from its own cursor and converges — there is no
-    cross-component transaction to tear. Call it on a schedule and the
-    platform follows the feed.
+    guards, cursor-keyed units, snapshot-cleared ledgers), so re-running after ANY partial failure resumes each from
+    its own cursor and converges — there is no cross-component
+    transaction to tear. The monitor holds aggregates, not subject rows,
+    so it is outside per-subject erasure.
 
-    Erasure scope: the monitor holds AGGREGATES (counts, unigram count
-    frames, HLL sketches), not subject rows — like k-means centroids,
-    they are outside per-subject erasure; the raw landing zone's story
-    is compaction + retention (see run_erasure).
-
-    Store maintenance: every fold appends one posting batch / monitor
-    unit, so a platform following a feed accumulates one directory per
-    catch-up forever unless something merges the prefix. When
-    ``compact_after`` is set (default 16), :func:`run_maintenance` runs
-    LAST: any store whose visible batch/unit count exceeds it is
-    compacted (text_index.compact_postings / monitor.compact_batches —
-    both crash-safe by their manifest protocols, answers bit-identical)
-    and vacuumed. None disables, for callers scheduling maintenance at
-    their own granularity.
-
-    Epochs (r9): after a successful wave (and after maintenance, so the
-    recorded frontier survives it) every component's read frontier is
-    committed as ``<root>/epochs/<n>`` (http_feeds_spark/epochs.py) —
-    a reader that pins epoch N sees EVERY store at wave N while wave
-    N+1 lands concurrently: the platform's cross-store consistency
-    token without a cross-component transaction. ``record_epochs=False``
-    disables. ``retire_below_seq`` runs :func:`retire_landing_history`
-    after the landing catch-up (the spec's retention story from the
-    one-call API — pass the minimum cursor across consumers that still
-    bootstrap from raw). ``verify=True`` (r11) runs the one-call
-    :func:`operators.fsck.fsck_platform` audit after everything: the
-    report rides the summary under ``"fsck"``, and a MUST-BE-ZERO
-    violation (corruption) raises — the audit surface now matches the
-    one-call ingest surface. Returns the per-component summaries (+ the
-    epoch record)."""
+    ``retire_below_seq`` runs :func:`retire_landing_history` after the
+    folds and erasure, so nothing rewrites raw before this wave's
+    consumers have read it (pass the minimum cursor across consumers
+    that still bootstrap from raw). ``compact_after`` (default 16; None
+    disables) runs :func:`run_maintenance` next, which bounds the
+    batch/unit/file counts the folds accumulate. Then, unless
+    ``record_epochs=False``, every component's read frontier is
+    committed as ``<root>/epochs/<n>`` (http_feeds_spark/epochs.py): a
+    reader that pins epoch N sees every store at wave N while wave N+1
+    lands. ``verify=True`` runs :func:`operators.fsck.fsck_platform`
+    last; its report rides the summary under ``"fsck"``, and a
+    MUST-BE-ZERO violation raises :class:`PlatformVerifyError`. Returns
+    the per-component summaries (+ the epoch record)."""
     root = platform_root.rstrip("/")
+    land = f"{root}/landing"
     out: dict = {"platform_root": platform_root}
     if landing:
-        out["landing"] = run(spark, url, f"{root}/landing", compact=compact)
-        if retire_below_seq is not None and out["landing"]["raw_rows"]:
-            # the spec's retention story from the one-call API: raw ages
-            # out below the caller's horizon (the minimum cursor across
-            # consumers bootstrapping from raw), compacted serves history
-            out["landing"]["retention"] = retire_landing_history(
-                spark, f"{root}/landing", horizon_seq=retire_below_seq
-            )
+        out["landing"] = run(spark, url, land, compact=compact)
     kw = dict(doc_id_field=doc_id_field, text_field=text_field)
     if text_index:
-        out["text_index"] = run_text_index(spark, url, f"{root}/text_index", **kw)
+        out["text_index"] = run_text_index(spark, land, f"{root}/text_index", **kw)
     if dedup_index:
-        out["dedup_index"] = run_dedup_index(spark, url, f"{root}/dedup_index", **kw)
+        out["dedup_index"] = run_dedup_index(spark, land, f"{root}/dedup_index", **kw)
     if monitor:
-        out["monitor"] = run_monitor(spark, url, f"{root}/monitor", **kw)
+        out["monitor"] = run_monitor(spark, land, f"{root}/monitor", **kw)
     vkw = dict(id_field=doc_id_field, vec_field=vec_field)
     if ann_index:
-        out["ann_index"] = run_ann_index(spark, url, f"{root}/ann_index", **vkw)
+        out["ann_index"] = run_ann_index(spark, land, f"{root}/ann_index", **vkw)
     if pq_index:
-        out["pq_index"] = run_pq_index(spark, url, f"{root}/pq_index", **vkw)
+        out["pq_index"] = run_pq_index(spark, land, f"{root}/pq_index", **vkw)
     if media_index:
         out["media_index"] = run_media_index(
             spark,
-            url,
+            land,
             f"{root}/media_index",
             doc_id_field=doc_id_field,
             payload_field=payload_field,
@@ -602,7 +617,7 @@ def run_platform(
     if erasure:
         out["erasure"] = run_erasure(
             spark,
-            url,
+            land,
             text_index_root=f"{root}/text_index" if text_index else None,
             dedup_index_root=f"{root}/dedup_index" if dedup_index else None,
             ann_index_root=f"{root}/ann_index" if ann_index else None,
@@ -623,6 +638,14 @@ def run_platform(
 
             sd.rebuild_assignment(spark, f"{root}/dedup_index")
             out["erasure"]["dedup_clusters_rebuilt"] = True
+    if landing and retire_below_seq is not None and out["landing"]["raw_rows"]:
+        # the spec's retention story from the one-call API: raw ages out
+        # below the caller's horizon (the minimum cursor across consumers
+        # bootstrapping from raw), compacted serves history. Last among
+        # the readers of raw: a DELETE it ages out has reached the stores
+        out["landing"]["retention"] = retire_landing_history(
+            spark, land, horizon_seq=retire_below_seq
+        )
     if compact_after is not None:
         out["maintenance"] = run_maintenance(
             spark,
@@ -658,12 +681,9 @@ def run_platform(
 
 class PlatformVerifyError(RuntimeError):
     """run_platform(verify=True) found fsck invariant violations after
-    the wave. Carries the FULL wave summary (``.summary``) and the
-    complete fsck_platform report (``.report``) so operators get the
-    whole audit — per-store families, warnings, clean list — not just
-    the violations line, even though the wave raised instead of
-    returning. A RuntimeError subclass: pre-r12 callers that caught
-    RuntimeError keep working."""
+    the wave. Carries the full wave summary (``.summary``) and the
+    complete fsck_platform report (``.report``), so the whole audit
+    survives the raise."""
 
     def __init__(self, summary: dict):
         self.summary = summary
@@ -710,15 +730,10 @@ def run_maintenance(
     granularity should disable here and schedule compact_batches at the
     granularity they keep (e.g. daily).
 
-    Text-index write amplification: the policy is SIZE-TIERED first
-    (compact_postings_tiered — only ≥min_run runs of the same size
-    class merge, so each byte is rewritten O(log store) times over its
-    lifetime and settled large batches are never churned), with the
-    full-prefix merge as the fallback that guarantees the
-    ``compact_after`` bound when tiering's steady state (min_run ×
-    size classes) still exceeds it. The monitor keeps the simple
-    full-prefix merge: its units are model-sized aggregate frames, not
-    corpus bytes, so amplification there is noise.
+    The text index merges SIZE-TIERED first (each byte rewritten
+    O(log store) times), with the full-prefix merge as the fallback
+    that guarantees the ``compact_after`` bound; the monitor's units are
+    model-sized aggregates, so it keeps the simple full-prefix merge.
 
     Returns per-store {"batches_before", "batches_after", "vacuumed"}
     (absent stores count 0 and are skipped)."""
@@ -732,11 +747,6 @@ def run_maintenance(
         before = ti.visible_batches(spark, ti_root)
         summary = {"batches_before": len(before), "batches_after": len(before)}
         if len(before) > compact_after:
-            # size-tiered first (LSM write-amplification bound: settled
-            # large batches are not rewritten until enough same-sized
-            # peers accumulate); full-prefix merge only as the fallback
-            # that guarantees the compact_after bound when tiering's
-            # steady state (min_run x size classes) still exceeds it
             after = ti.compact_postings_tiered(spark, ti_root)
             if len(after) > compact_after:
                 after = ti.compact_postings(spark, ti_root, upto=max(after))
@@ -756,56 +766,29 @@ def run_maintenance(
         summary["vacuumed"] = mon.vacuum(spark, mon_root) if before else 0
         out["monitor"] = summary
 
-    # the append-partitioned stores (dedup buckets, ANN/PQ clusters) gain
-    # one FILE-SET per fold/upsert rather than new batch dirs — their
-    # bound is files per partition dir, not batch count
-    from http_feeds_spark.stores import data_file_stats
+    # the append-partitioned stores (dedup buckets, ANN/PQ clusters, media
+    # buckets) gain one FILE-SET per fold/upsert rather than new batch
+    # dirs — their bound is files per partition dir, not batch count
+    import importlib
 
-    def _file_compact(name: str, probe_path: str, compact_fn) -> None:
-        files, dirs = data_file_stats(spark, probe_path)
-        summary = {"files_before": files, "files_after": files}
+    for name, enabled, module, data_dir in [
+        ("dedup_index", dedup_index, "streaming.dedup", "SHINGLES_DIR"),
+        ("ann_index", ann_index, "operators.ann_index", "CORPUS_DIR"),
+        ("pq_index", pq_index, "operators.pq_index", "CODES_DIR"),
+        ("media_index", media_index, "streaming.media", "META_DIR"),
+    ]:
+        if not enabled:
+            continue
+        mod = importlib.import_module(f"http_feeds_spark.{module}")
+        store = f"{root}/{name}"
+        probe = f"{store}/{getattr(mod, data_dir)}"
+        files, dirs = data_file_stats(spark, probe)
+        if not files:
+            continue
+        out[name] = {"files_before": files, "files_after": files}
         if dirs and files > files_per_partition * dirs:
-            compact_fn()
-            summary["files_after"] = data_file_stats(spark, probe_path)[0]
-        if files:
-            out[name] = summary
-
-    if dedup_index:
-        from http_feeds_spark.streaming import dedup as sd
-
-        sd_root = f"{root}/dedup_index"
-        _file_compact(
-            "dedup_index",
-            f"{sd_root}/{sd.SHINGLES_DIR}",
-            lambda: sd.compact_store(spark, sd_root),
-        )
-    if ann_index:
-        from http_feeds_spark.operators import ann_index as ai
-
-        ai_root = f"{root}/ann_index"
-        _file_compact(
-            "ann_index",
-            f"{ai_root}/{ai.CORPUS_DIR}",
-            lambda: ai.compact_store(spark, ai_root),
-        )
-    if pq_index:
-        from http_feeds_spark.operators import pq_index as pqi
-
-        pq_root = f"{root}/pq_index"
-        _file_compact(
-            "pq_index",
-            f"{pq_root}/{pqi.CODES_DIR}",
-            lambda: pqi.compact_store(spark, pq_root),
-        )
-    if media_index:
-        from http_feeds_spark.streaming import media as smedia
-
-        m_root = f"{root}/media_index"
-        _file_compact(
-            "media_index",
-            f"{m_root}/{smedia.META_DIR}",
-            lambda: smedia.compact_store(spark, m_root),
-        )
+            mod.compact_store(spark, store)
+            out[name]["files_after"] = data_file_stats(spark, probe)[0]
     if landing:
         # the raw landing zone is the streaming SINK — its file bound
         # must go through the sink's commit log (r9, compact_landing_files)
@@ -824,22 +807,16 @@ def _sink_log_state(spark: SparkSession, meta_dir: str):
     presence = committed. Returns (fs, None) when the log is absent."""
     import json
 
-    from http_feeds_spark.stores import hadoop_fs
-
     fs, jmeta = hadoop_fs(spark, meta_dir)
     if not fs.exists(jmeta):
         return fs, None
-    jvm = spark.sparkContext._jvm
     entries: dict[int, tuple[str, list]] = {}
     for st in fs.listStatus(jmeta):
         name = st.getPath().getName()
         base = name[:-8] if name.endswith(".compact") else name
         if name.startswith(".") or not base.isdigit():
             continue
-        text = jvm.org.apache.commons.io.IOUtils.toString(
-            fs.open(st.getPath()), "UTF-8"
-        )
-        lines = text.splitlines()
+        lines = _read_text(spark, f"{meta_dir}/{name}").splitlines()
         if not lines or lines[0] != "v1":
             raise ValueError(
                 f"unrecognized sink log version in {meta_dir}/{name}: "
@@ -849,24 +826,15 @@ def _sink_log_state(spark: SparkSession, meta_dir: str):
     return fs, entries
 
 
-def _write_sink_log_entry(spark, fs, meta_dir: str, name: str, statuses: list) -> None:
-    """Overwrite one commit-log entry (temp + atomic rename, through the
-    Hadoop FS so checksum sidecars stay consistent). A name that does not
-    parse as a batch id (the .tmp) is invisible to the log reader."""
+def _write_sink_log_entry(spark, meta_dir: str, name: str, statuses: list) -> None:
+    """Overwrite one commit-log entry (:func:`_write_text`; its dot-named
+    temp does not parse as a batch id, so the log reader skips it)."""
     import json
 
-    from http_feeds_spark.stores import hadoop_fs
-
-    _, tmp = hadoop_fs(spark, f"{meta_dir}/.{name}.maint.tmp")
-    _, final = hadoop_fs(spark, f"{meta_dir}/{name}")
     body = "v1\n" + "".join(
         json.dumps(s, separators=(",", ":")) + "\n" for s in statuses
     )
-    out = fs.create(tmp, True)
-    out.write(bytearray(body.encode("utf-8")))
-    out.close()
-    fs.delete(final, False)
-    fs.rename(tmp, final)
+    _write_text(spark, f"{meta_dir}/{name}", body)
 
 
 def compact_landing_files(
@@ -935,34 +903,26 @@ def _rewrite_landing(
     retention caller); an int gates on the visible file count."""
     import json
 
-    from http_feeds_spark.stores import hadoop_fs
-
     raw, _, _ = _paths(landing_root)
     meta_dir = f"{raw}/_spark_metadata"
     fs, entries = _sink_log_state(spark, meta_dir)
     stage_dir = f"{raw}__maint_stage"
     manifest_path = f"{stage_dir}/manifest"
-    _, jmanifest = hadoop_fs(spark, manifest_path)
     _, jstage = hadoop_fs(spark, stage_dir)
 
     def _apply(man: dict) -> None:
         """Re-playable post-commit phase: log rewrite + old-file delete."""
-        _write_sink_log_entry(
-            spark, fs, meta_dir, man["list_entry"], man["new_statuses"]
-        )
+        _write_sink_log_entry(spark, meta_dir, man["list_entry"], man["new_statuses"])
         for name in man["empty_entries"]:
-            _write_sink_log_entry(spark, fs, meta_dir, name, [])
+            _write_sink_log_entry(spark, meta_dir, name, [])
         for p in man["old_paths"]:
             _, jp = hadoop_fs(spark, p)
             fs.delete(jp, False)
         fs.delete(jstage, True)
 
-    if fs.exists(jmanifest):  # resume a torn rewrite, converge first
-        jvm = spark.sparkContext._jvm
-        man = json.loads(
-            jvm.org.apache.commons.io.IOUtils.toString(fs.open(jmanifest), "UTF-8")
-        )
-        _apply(man)
+    torn = _read_text(spark, manifest_path)
+    if torn is not None:  # resume a torn rewrite, converge first
+        _apply(json.loads(torn))
         fs, entries = _sink_log_state(spark, meta_dir)
 
     if entries is None:
@@ -1049,11 +1009,7 @@ def _rewrite_landing(
         ],
         "old_paths": [s["path"] for s in old_statuses],
     }
-    _, jtmp = hadoop_fs(spark, f"{stage_dir}/.manifest.tmp")
-    out = fs.create(jtmp, True)
-    out.write(bytearray(json.dumps(man).encode("utf-8")))
-    out.close()
-    fs.rename(jtmp, jmanifest)  # commit point
+    _write_text(spark, manifest_path, json.dumps(man))  # commit point
 
     _apply(man)
     return {
@@ -1070,8 +1026,6 @@ def retention_horizon(spark: SparkSession, landing_root: str) -> int | None:
     """The landing zone's retirement horizon: raw entries with seq ≤ it
     have been aged out wholesale and live ONLY in the compacted copy.
     None = no retirement has ever run (raw is self-sufficient)."""
-    from http_feeds_spark.stores import parquet_exists
-
     path = f"{landing_root.rstrip('/')}/{RETENTION_DIR}"
     if not parquet_exists(spark, path):
         return None
@@ -1091,10 +1045,19 @@ def _full_feed(spark: SparkSession, landing_root: str) -> DataFrame:
     event into one survivor. They cannot be duplicated between the two
     sides anyway — retirement itself refuses null seqs, so the
     compacted copy's retired slice is all non-null."""
+    from pyspark.sql.types import StructField, StructType
+
+    from http_feeds_spark.schema import ENVELOPE
+
     raw, _, compacted = _paths(landing_root)
-    feed = spark.read.parquet(raw)
+    # the landed schema is known: naming it skips the inference job.
+    # Nullable, so rows landed without an envelope field still read
+    read = spark.read.schema(
+        StructType([StructField(f.name, f.dataType) for f in ENVELOPE.fields])
+    )
+    feed = read.parquet(raw)
     if retention_horizon(spark, landing_root) is not None:
-        both = feed.unionByName(spark.read.parquet(compacted))
+        both = feed.unionByName(read.parquet(compacted))
         feed = both.where(F.col("seq").isNotNull()).dropDuplicates(
             ["seq"]
         ).unionByName(both.where(F.col("seq").isNull()))
@@ -1132,19 +1095,13 @@ def retire_landing_history(
        ``seq > horizon_seq`` (same manifest-resume protocol as
        compact_landing_files — re-running converges).
 
-    Refused on a raw zone with null seqs (opaque ids): retiring by seq
-    would be meaningless there — mint seq at ingest (parse_seq_auto) or
-    normalize upstream. Returns {"horizon_seq", "compacted_rows",
-    "files_before", "files_after", "rows"} (rows = raw rows kept)."""
+    Refused on a raw zone with null seqs (opaque ids,
+    :class:`NullSeqError`): retiring by seq would be meaningless there.
+    Returns {"horizon_seq", "compacted_rows", "files_before",
+    "files_after", "rows"} (rows = raw rows kept)."""
     raw, _, _ = _paths(landing_root)
-    if (
-        spark.read.parquet(raw)
-        .filter(F.col("seq").isNull())
-        .limit(1)
-        .count()
-        > 0
-    ):
-        raise ValueError(
+    if spark.read.parquet(raw).filter(F.col("seq").isNull()).limit(1).count():
+        raise NullSeqError(
             "landing zone has null-seq rows (opaque event ids): a seq "
             "retirement horizon is meaningless there — mint seq at "
             "ingest (parse_seq_auto) or normalize the feed upstream"
@@ -1170,22 +1127,9 @@ def retire_landing_history(
 
 
 def _count_or_zero(spark: SparkSession, path: str) -> int:
-    """Row count of a parquet dataset; 0 when the sink has committed no
-    data files yet (first catch-up against a still-empty feed writes only
-    the sink's metadata log — a normal deployment order, not an error)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path).count()
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "UNABLE_TO_INFER_SCHEMA" in msg
-            or "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-        ):
-            return 0
-        raise
+    """Row count of a parquet dataset; 0 while nothing is there (a first
+    catch-up against a still-empty feed — a normal deployment order)."""
+    return or_none(lambda: spark.read.parquet(path).count()) or 0
 
 
 def compact_now(
@@ -1270,8 +1214,6 @@ def read_model(spark: SparkSession, landing_root: str, prefer_compacted: bool = 
     marker routes every read through :func:`_full_feed` (raw tail ∪
     compacted), so retired-but-live subjects keep answering and
     ``prefer_compacted`` only matters pre-retirement."""
-    from http_feeds_spark.stores import parquet_exists
-
     raw, _, compacted = _paths(landing_root)
     if retention_horizon(spark, landing_root) is not None:
         return ops.read_model(_full_feed(spark, landing_root))

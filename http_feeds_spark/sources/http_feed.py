@@ -27,7 +27,8 @@ loop is the correct topology; *scale-out happens downstream* — the moment
 rows land they are repartition-distributed for parse/compaction/aggregation
 across the cluster, and bulk bootstrap should replay the Parquet landing
 zone (A1 batch path), not HTTP. Every walk refuses a page that does not
-move past its cursor (:class:`FeedContractError`) instead of looping on it.
+move past its cursor, or whose ids are missing, repeated or out of order
+(:class:`FeedContractError`), instead of looping on it or landing it.
 
 Batch: ``DataSourceReader`` paginates the whole feed to its end — intended
 for tests and small bootstraps (one partition; see above).
@@ -40,6 +41,7 @@ from __future__ import annotations
 import email.utils
 import http.client
 import json
+import re
 import time
 import urllib.error
 import urllib.parse
@@ -60,11 +62,18 @@ from http_feeds_spark.schema import WIRE_ENVELOPE
 FIELDS = [f.name for f in WIRE_ENVELOPE.fields]
 
 
+_UUID6 = re.compile(r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-6[0-9a-fA-F]{3}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
+
+
 def _seq_or_none(event_id: str | None) -> int | None:
-    """Ordered numeric prefix of a composite ``sequence::uuid`` id
-    (README.md:159); None for opaque ids."""
+    """The position an id encodes, as ``operators.feed.parse_seq_auto``
+    reads it: the numeric prefix of a composite ``sequence::uuid`` id
+    (README.md:159) or the 60-bit timestamp of a UUIDv6 (README.md:156);
+    None for opaque ids."""
     if not event_id:
         return None
+    if _UUID6.fullmatch(event_id):
+        return int(event_id[:8] + event_id[9:13] + event_id[15:18], 16)
     head = event_id.split("::", 1)[0]
     try:
         return int(head)
@@ -120,8 +129,9 @@ _READ_MAX_EVENTS = 100_000
 
 
 class FeedContractError(RuntimeError):
-    """The server broke the scroll contract (README.md:12, :300): a page
-    that does not move past the cursor. ``cursor`` is the lastEventId
+    """The server broke the feed contract (README.md:12, :300, :309): a
+    page that does not move past the cursor, or whose events lack ids,
+    repeat one or go back in position. ``cursor`` is the lastEventId
     the page was requested with."""
 
     def __init__(self, message: str, cursor: str | None):
@@ -129,21 +139,27 @@ class FeedContractError(RuntimeError):
         super().__init__(f"{message} (lastEventId={cursor!r})")
 
 
-def _check_advances(cursor: str | None, events: list[dict]) -> None:
-    """Raise :class:`FeedContractError` unless a non-empty page moves
-    past `cursor`: its last id must differ from the cursor, and for
-    composite ids (README.md:159) its first position must lie beyond
-    the cursor's. A walk that accepted such a page would refetch it
-    forever, or land events twice."""
-    if cursor is None:
-        return
-    if events[-1]["id"] == cursor:
+def _check_page(cursor: str | None, events: list) -> None:
+    """Raise :class:`FeedContractError` unless a non-empty page is a
+    well-formed step past `cursor`: every element an object with a
+    string id, no id twice, the last id not the cursor, and the
+    positions of composite and UUIDv6 ids (README.md:156-159) strictly
+    increasing from the cursor's. A walk that accepted such a page
+    would refetch it forever, land events twice, or out of order."""
+    if not all(isinstance(e, dict) and isinstance(e.get("id"), str) for e in events):
+        raise FeedContractError("feed page holds an event without a string id", cursor)
+    ids = [e["id"] for e in events]
+    if len(set(ids)) < len(ids):
+        raise FeedContractError("feed page repeats an event id", cursor)
+    if ids[-1] == cursor:
         raise FeedContractError("feed page ends at the cursor it was asked past", cursor)
-    cursor_pos, first_pos = _seq_or_none(cursor), _seq_or_none(events[0]["id"])
-    if cursor_pos is not None and first_pos is not None and first_pos <= cursor_pos:
-        raise FeedContractError(
-            f"feed page starts at position {first_pos}, not past the cursor", cursor
-        )
+    last = _seq_or_none(cursor)
+    for pos in (p for p in map(_seq_or_none, ids) if p is not None):
+        if last is not None and pos <= last:
+            raise FeedContractError(
+                f"feed page position {pos} does not follow position {last}", cursor
+            )
+        last = pos
 
 
 def _cacheable(cache_control: str | None) -> bool:
@@ -236,7 +252,7 @@ def _pages(url: str, cursor: str | None, timeout_ms: int | None = None,
     first request carries the long-poll `timeout_ms`: it may wait at the
     head, and the requests after it return at once."""
     while events := fetch_batch(url, cursor, timeout_ms, use_cache=use_cache):
-        _check_advances(cursor, events)
+        _check_page(cursor, events)
         yield events
         cursor = events[-1]["id"]
         timeout_ms = None

@@ -40,19 +40,21 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
     that mistakes a transient read error for "no index yet" would skip
     its idempotence anti-join and rebuild from one batch's data,
     silently destroying prior state."""
+    return or_none(lambda: spark.read.parquet(path).schema) is not None
+
+
+def or_none(read):
+    """``read()``, or None when it fails because nothing was written
+    there yet: a missing path, or a streaming sink that has committed no
+    data file. Any other failure propagates."""
     from pyspark.errors import AnalysisException
 
     try:
-        spark.read.parquet(path).schema
-        return True
+        return read()
     except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-            or "Path does not exist" in msg
-        ):
-            return False
+        absent = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA", "Path does not exist")
+        if any(m in str(e) for m in absent):
+            return None
         raise
 
 

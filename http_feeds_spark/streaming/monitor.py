@@ -20,10 +20,10 @@ aggregate cost. So each micro-batch appends two MERGEABLE summaries:
                         store (distinct_counts / new_vocabulary)
 
 Idempotence = the directory layout: each batch writes BY OVERWRITE to
-its own ``batch=<id>`` directory, so a foreachBatch replay after a
-crash rewrites the same paths with the same deterministic content —
-at-least-once delivery, exactly-once store effect, no transactional
-sink needed (the ingest.py convention).
+its own ``batch=<id>`` directory, and ingest.run_monitor keys a unit by
+the cursor its fold started from, so a refold after a crash rewrites
+the same paths with the same deterministic content — at-least-once
+delivery, exactly-once store effect, no transactional sink needed.
 
 ``js_between`` then computes the exact Jensen-Shannon divergence
 between ANY two batch ranges by summing their stored count frames
@@ -208,7 +208,7 @@ def read_stats(spark: SparkSession, monitor_root: str) -> DataFrame:
         gen, keep, _ = man
         frames.append(
             spark.read.parquet(f"{root}/{MERGED_DIR}/{gen:06d}/{STATS_DIR}")
-            .withColumn("batch", F.lit(keep).cast("int"))
+            .withColumn("batch", F.lit(keep).cast("long"))
         )
     if not frames:
         raise FileNotFoundError(f"no monitor batches at {monitor_root}")

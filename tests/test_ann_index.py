@@ -145,7 +145,7 @@ def test_feed_grows_ann_index_e2e(spark, tmp_path):
     """Feed → ANN composition (ingest.run_ann_index): a live HTTP feed
     whose CloudEvents payloads are vectors grows the persisted IVF index
     — bootstrap build on the first batch, frozen-quantizer upserts after.
-    Covers: catch-up → producer appends → RESTART on the same checkpoint
+    Covers: catch-up → producer appends → RESTART from the same cursor
     → full-probe search over the stream-grown index ≡ full-probe search
     over a freshly batch-built index of the same corpus (full probe is
     exact, so quantizer drift cannot hide a lost/duplicated vector);
@@ -172,18 +172,22 @@ def test_feed_grows_ann_index_e2e(spark, tmp_path):
         state.append("org.example.vector", "0", None, method="DELETE")
         root = str(tmp_path / "feed_ann")
 
-        s1 = ingest.run_ann_index(spark, url, root, k=4, iters=1)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        s1 = ingest.run_ann_index(spark, landing, root, k=4, iters=1)
         assert s1["indexed_vectors"] == len(phase1)
 
         for i in phase2:
             state.append(
                 "org.example.vector", str(i), {"vec_id": i, "embedding": vec(i)}
             )
-        # restart: same checkpoint resumes the cursor; only new events fold
-        s2 = ingest.run_ann_index(spark, url, root, k=4, iters=1)
+        # restart: the store's cursor resumes; only new events fold
+        ingest.run(spark, url, landing)
+        s2 = ingest.run_ann_index(spark, landing, root, k=4, iters=1)
         assert s2["indexed_vectors"] == len(phase1) + len(phase2)
         # nothing new: a third run must change nothing
-        s3 = ingest.run_ann_index(spark, url, root, k=4, iters=1)
+        ingest.run(spark, url, landing)
+        s3 = ingest.run_ann_index(spark, landing, root, k=4, iters=1)
         assert s3["indexed_vectors"] == s2["indexed_vectors"]
 
         corpus = spark.createDataFrame(

@@ -286,9 +286,9 @@ def test_propagate_erasure_all_four_stores(spark, sf_dir, tmp_path):
 
 
 def test_run_erasure_walks_the_feed_once(spark, tmp_path):
-    """run_erasure reads the feed's erase set in ONE walk, however many
-    stores consume it: every store's erase_ids and the summary count
-    read one materialized snapshot, not a fresh HTTP walk each."""
+    """run_erasure reads the erase set from the landing zone, never the
+    HTTP feed, however many stores consume it: every store's erase_ids
+    and the summary count read one materialized snapshot."""
     from http_feeds_spark import ingest
     from tests.feed_server import FeedState, serve
 
@@ -308,13 +308,14 @@ def test_run_erasure_walks_the_feed_once(spark, tmp_path):
             state.append("org.example.document", str(i), {"doc_id": i})
         for i in (2, 4):
             state.append("org.example.document", str(i), None, method="DELETE")
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
         before = state.request_count
         out = ingest.run_erasure(
-            spark, url, text_index_root=ti_root, dedup_index_root=sd_root
+            spark, landing, text_index_root=ti_root, dedup_index_root=sd_root
         )
-        # one walk of an 8-event feed: its only page, then the empty
-        # end-of-feed page
-        assert state.request_count - before == 2
+        # the landing catch-up made the wave's only walk
+        assert state.request_count - before == 0
         assert out["erase_ids"] == 2
         assert out["text_index_erased"] == 2 and out["dedup_index_erased"] == 2
     finally:
@@ -340,13 +341,16 @@ def test_feed_delete_tombstone_to_erasure_composition(spark, tmp_path):
             )
         ti_root = str(tmp_path / "ti")
         sd_root = str(tmp_path / "sd")
-        ingest.run_text_index(spark, url, ti_root)
-        ingest.run_dedup_index(spark, url, sd_root)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        ingest.run_text_index(spark, landing, ti_root)
+        ingest.run_dedup_index(spark, landing, sd_root)
         assert ti.search(spark, ti_root, ["window"], k=10).count() == 6
 
         state.append("org.example.document", "2", None, method="DELETE")
+        ingest.run(spark, url, landing)
         out = ingest.run_erasure(
-            spark, url, text_index_root=ti_root, dedup_index_root=sd_root, purge=True
+            spark, landing, text_index_root=ti_root, dedup_index_root=sd_root, purge=True
         )
         assert out["erase_ids"] == 1
         assert out["text_index_erased"] == 1
@@ -365,7 +369,7 @@ def test_feed_delete_tombstone_to_erasure_composition(spark, tmp_path):
         )
         # re-running derives the same erase set; everything already gone
         again = ingest.run_erasure(
-            spark, url, text_index_root=ti_root, dedup_index_root=sd_root, purge=True
+            spark, landing, text_index_root=ti_root, dedup_index_root=sd_root, purge=True
         )
         assert again["text_index_purged"] == 0
     finally:

@@ -188,8 +188,10 @@ def test_folds_independent_of_page_grouping(spark, feed, tmp_path, monkeypatch):
         state.append("t", str(doc_id), {"doc_id": doc_id, "text": text})
     text_root, dedup_root = str(tmp_path / "text"), str(tmp_path / "dedup")
 
-    assert ingest.run_text_index(spark, url, text_root)["indexed_docs"] == 7
-    assert ingest.run_dedup_index(spark, url, dedup_root)["indexed_docs"] == 7
+    landing = str(tmp_path / "landing")
+    ingest.run(spark, url, landing)
+    assert ingest.run_text_index(spark, landing, text_root)["indexed_docs"] == 7
+    assert ingest.run_dedup_index(spark, landing, dedup_root)["indexed_docs"] == 7
     assert [r.doc_id for r in ti.search(spark, text_root, ["alpha"]).collect()] == [7]
     assert ti.search(spark, text_root, ["omega"]).count() == 0
     stored = (
@@ -198,3 +200,89 @@ def test_folds_independent_of_page_grouping(spark, feed, tmp_path, monkeypatch):
     )
     expect = sd._shingle_batch(spark.createDataFrame([(7, v1)], "doc_id long, text string"))
     assert [sorted(r.shingles) for r in stored] == [sorted(expect.collect()[0].shingles)]
+
+
+class _Malformed(fs.FeedState):
+    """Serves the second event of every page through ``bad``."""
+
+    bad = staticmethod(lambda e: e)
+
+    def batch_after(self, last_event_id, limit):
+        page = super().batch_after(last_event_id, limit)
+        return page[:1] + [self.bad(e) for e in page[1:2]] + page[2:]
+
+
+_NO_ID = {
+    "missing id": lambda e: {k: v for k, v in e.items() if k != "id"},
+    "not an object": lambda e: e["id"],
+}
+
+
+def _malformed_feed(bad):
+    state = _Malformed()
+    state.bad = bad
+    _append(state, 5)
+    return state, *fs.serve(state)
+
+
+@pytest.mark.parametrize("bad", list(_NO_ID))
+def test_stream_read_refuses_event_without_id(bad):
+    """An event without an id, or an array element that is not an
+    object, is a contract error carrying the cursor — not a KeyError."""
+    from http_feeds_spark.sources.http_feed import FeedContractError, HttpFeedStreamReader
+
+    state, srv, url = _malformed_feed(_NO_ID[bad])
+    try:
+        with pytest.raises(FeedContractError, match="without a string id") as err:
+            HttpFeedStreamReader({"url": url}).read({"lastEventId": fs.make_id(1)})
+        assert err.value.cursor == fs.make_id(1)
+    finally:
+        srv.shutdown()
+
+
+@pytest.mark.parametrize("bad", list(_NO_ID))
+def test_batch_read_refuses_event_without_id(bad):
+    from http_feeds_spark.sources.http_feed import FeedContractError, HttpFeedBatchReader
+
+    state, srv, url = _malformed_feed(_NO_ID[bad])
+    try:
+        with pytest.raises(FeedContractError, match="without a string id") as err:
+            list(HttpFeedBatchReader({"url": url, "lasteventid": fs.make_id(1)}).read(None))
+        assert err.value.cursor == fs.make_id(1)
+    finally:
+        srv.shutdown()
+
+
+def test_walk_refuses_out_of_order_ids_inside_a_page(feed):
+    """A page whose first and last ids move past the cursor but whose
+    positions go back in between is refused."""
+    from http_feeds_spark.sources.http_feed import FeedContractError, HttpFeedStreamReader
+
+    state, url = feed
+    _append(state, 5)
+    state.events[1], state.events[2] = state.events[2], state.events[1]
+    with pytest.raises(FeedContractError, match="position 2 does not follow position 3"):
+        HttpFeedStreamReader({"url": url}).read({"lastEventId": None})
+
+
+def test_walk_refuses_repeated_id_inside_a_page(feed):
+    from http_feeds_spark.sources.http_feed import FeedContractError, HttpFeedStreamReader
+
+    state, url = feed
+    _append(state, 5)
+    state.events.insert(3, dict(state.events[1]))
+    with pytest.raises(FeedContractError, match="repeats an event id"):
+        HttpFeedStreamReader({"url": url}).read({"lastEventId": None})
+
+
+def test_uuid6_positions_are_checked():
+    """UUIDv6 ids carry their position in the leading 60 timestamp bits
+    (the key ``parse_seq_auto`` lands as seq); a page going back in it
+    is refused like a composite one."""
+    from http_feeds_spark.sources.http_feed import FeedContractError, _check_page, _seq_or_none
+
+    early, late = "1ec9414c-232a-6b00-b3c8-9e6bdeced846", "1ec9414c-232b-6b00-b3c8-9e6bdeced846"
+    assert _seq_or_none(early) == int("1ec9414c232ab00", 16) < _seq_or_none(late)
+    _check_page(None, [{"id": early}, {"id": late}])
+    with pytest.raises(FeedContractError, match="does not follow"):
+        _check_page(None, [{"id": late}, {"id": early}])

@@ -333,7 +333,9 @@ def test_malformed_base64_payload_is_skipped(spark, tmp_path):
             "org.example.media", "2", {"doc_id": 2, "payload_b64": "!!!not-base64???"}
         )
         _append_media(state, 3, mm.encode_png(mm.synth_image(seed=3)))
-        out = ingest.run_media_index(spark, url, str(tmp_path / "media"))
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        out = ingest.run_media_index(spark, landing, str(tmp_path / "media"))
         assert out["indexed_docs"] == 2
         ids = {r.doc_id for r in smedia.read_meta(spark, str(tmp_path / "media")).collect()}
         assert ids == {1, 3}

@@ -65,7 +65,9 @@ def test_feed_to_monitor_e2e(spark, tmp_path):
         state.append("org.example.document", "0", None, method="DELETE")
         root = str(tmp_path / "feedmon")
 
-        s1 = ingest.run_monitor(spark, url, root)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        s1 = ingest.run_monitor(spark, landing, root)
         assert s1["n_docs"] == 4 and s1["batches"] >= 1
         first_batches = [r.batch for r in mon.read_stats(spark, root).collect()]
 
@@ -75,7 +77,8 @@ def test_feed_to_monitor_e2e(spark, tmp_path):
                 str(i),
                 {"doc_id": i, "text": f"alien{i} vocab{i} shift{i} zz{i} qq{i}"},
             )
-        s2 = ingest.run_monitor(spark, url, root)
+        ingest.run(spark, url, landing)
+        s2 = ingest.run_monitor(spark, landing, root)
         assert s2["n_docs"] == 8 and s2["batches"] > s1["batches"]
         new_batches = [
             r.batch
@@ -85,7 +88,8 @@ def test_feed_to_monitor_e2e(spark, tmp_path):
         js = mon.js_between(spark, root, first_batches, new_batches)
         assert js > 0.5, js  # planted disjoint-ish vocabulary
 
-        s3 = ingest.run_monitor(spark, url, root)
+        ingest.run(spark, url, landing)
+        s3 = ingest.run_monitor(spark, landing, root)
         assert s3["batches"] == s2["batches"] and s3["n_docs"] == 8
     finally:
         srv.shutdown()

@@ -255,16 +255,20 @@ def test_feed_to_pq_index_e2e(spark, tmp_path):
                 "org.example.vector", str(i), {"vec_id": i, "embedding": vec(i)}
             )
         root = str(tmp_path / "feed_pq")
-        s1 = ingest.run_pq_index(spark, url, root, nlist=4, m=2, ksub=4, iters=1)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        s1 = ingest.run_pq_index(spark, landing, root, nlist=4, m=2, ksub=4, iters=1)
         assert s1["indexed_vectors"] == 20
 
         for i in range(20, 30):
             state.append(
                 "org.example.vector", str(i), {"vec_id": i, "embedding": vec(i)}
             )
-        s2 = ingest.run_pq_index(spark, url, root, nlist=4, m=2, ksub=4, iters=1)
+        ingest.run(spark, url, landing)
+        s2 = ingest.run_pq_index(spark, landing, root, nlist=4, m=2, ksub=4, iters=1)
         assert s2["indexed_vectors"] == 30
-        s3 = ingest.run_pq_index(spark, url, root, nlist=4, m=2, ksub=4, iters=1)
+        ingest.run(spark, url, landing)
+        s3 = ingest.run_pq_index(spark, landing, root, nlist=4, m=2, ksub=4, iters=1)
         assert s3["indexed_vectors"] == 30
 
         q = spark.createDataFrame(

@@ -765,9 +765,7 @@ def test_ingest_continuous_mode_and_catchup_seam(spark, feed):
         assert raw.select("id").distinct().count() == 4
 
 
-@pytest.mark.parametrize(
-    "component, label", [("run", "landing"), ("run_monitor", "monitor")]
-)
+@pytest.mark.parametrize("component, label", [("run", "landing")])
 def test_catch_up_overrun_raises_and_stops_query(
     spark, feed, tmp_path, monkeypatch, component, label
 ):

@@ -100,9 +100,9 @@ def test_dedup_stream_query_equals_batch_groups(spark, sf_dir):
 def test_feed_grows_dedup_index_e2e(spark, tmp_path):
     """VERDICT r5 #2 — the two streaming halves meet: a live HTTP feed
     whose CloudEvents payloads are documents grows the persistent LSH
-    index via ingest.run_dedup_index (foreachBatch → fold_batch).
+    index via ingest.run_dedup_index (landing-zone fold → fold_batch).
     Covers: catch-up ingest → producer appends (a near-dup of an
-    already-indexed doc among them) → RESTART on the same checkpoint →
+    already-indexed doc among them) → RESTART from the same cursor →
     final assignment ≡ the batch pipeline over the same corpus; no-data
     tombstone events are skipped; a third run with nothing new is a
     no-op."""
@@ -137,7 +137,9 @@ def test_feed_grows_dedup_index_e2e(spark, tmp_path):
         state.append("org.example.document", "1", None, method="DELETE")
         root = str(tmp_path / "feed_idx")
 
-        s1 = ingest.run_dedup_index(spark, url, root)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        s1 = ingest.run_dedup_index(spark, landing, root)
         assert s1["indexed_docs"] == len(phase1)
         asg1 = {
             (r.node, r.component) for r in sd.read_assignment(spark, root).collect()
@@ -148,8 +150,9 @@ def test_feed_grows_dedup_index_e2e(spark, tmp_path):
             state.append(
                 "org.example.document", str(doc_id), {"doc_id": doc_id, "text": text}
             )
-        # restart: same checkpoint resumes the cursor; only new events fold
-        s2 = ingest.run_dedup_index(spark, url, root)
+        # restart: the store's cursor resumes; only new events fold
+        ingest.run(spark, url, landing)
+        s2 = ingest.run_dedup_index(spark, landing, root)
         assert s2["indexed_docs"] == len(phase1) + len(phase2)
 
         got = {
@@ -167,7 +170,8 @@ def test_feed_grows_dedup_index_e2e(spark, tmp_path):
         assert {(1, 1), (2, 1), (3, 1)} <= got
 
         # nothing new: a third run must change nothing
-        s3 = ingest.run_dedup_index(spark, url, root)
+        ingest.run(spark, url, landing)
+        s3 = ingest.run_dedup_index(spark, landing, root)
         assert s3["indexed_docs"] == s2["indexed_docs"]
         again = {
             (r.node, r.component) for r in sd.read_assignment(spark, root).collect()

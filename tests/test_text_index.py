@@ -154,16 +154,20 @@ def test_feed_to_text_index_e2e(spark, tmp_path):
             )
         state.append("org.example.document", "0", None, method="DELETE")
         root = str(tmp_path / "feed_ti")
-        s1 = ingest.run_text_index(spark, url, root)
+        landing = str(tmp_path / "landing")
+        ingest.run(spark, url, landing)
+        s1 = ingest.run_text_index(spark, landing, root)
         assert s1["indexed_docs"] == 3
 
         for i in range(3, 6):
             state.append(
                 "org.example.document", str(i), {"doc_id": i, "text": texts[i]}
             )
-        s2 = ingest.run_text_index(spark, url, root)
+        ingest.run(spark, url, landing)
+        s2 = ingest.run_text_index(spark, landing, root)
         assert s2["indexed_docs"] == 6
-        s3 = ingest.run_text_index(spark, url, root)  # nothing new
+        ingest.run(spark, url, landing)
+        s3 = ingest.run_text_index(spark, landing, root)  # nothing new
         assert s3["indexed_docs"] == 6
 
         docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
