@@ -4,12 +4,12 @@ platform that has NO cross-component transaction by design.
 Each store under ``ingest.run_platform`` folds the landing zone from its
 own cursor, so a reader joining text-index hits against the dedup
 assignment mid-catch-up can see store A at wave N and store B at wave
-N−1. The classical fix
-without a transaction is the SNAPSHOT TOKEN: after a successful wave the
-platform records every component's read frontier into one committed
-manifest (``<root>/epochs/<n>``), and a reader PINS an epoch — every
-store read then resolves against the frontier that manifest recorded,
-all from the same wave, while later waves land concurrently.
+N−1. The classical fix without a transaction is the SNAPSHOT TOKEN:
+after a successful wave the platform records every component's read
+frontier into one committed manifest (``<root>/epochs/<n>``), and a
+reader PINS an epoch — every store read then resolves against the
+frontier that manifest recorded, all from the same wave, while later
+waves land concurrently.
 
 What a frontier is, per store (each already versions its reads):
 

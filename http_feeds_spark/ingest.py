@@ -14,28 +14,32 @@ streaming query.
   /root/reference/README.md:111). Every run — bounded catch-up or live —
   resumes from it; a mid-stream restart replays at-least-once
   (README.md:113) and the parquet sink's commit log makes landing-zone
-  files exactly-once. Catch-up uses ``Trigger.AvailableNow``, which Spark
-  runs as one micro-batch for a Python source; the connector's read walks
-  the feed to its end, so one catch-up is one batch.
+  files exactly-once.
+- Catch-up uses ``Trigger.AvailableNow``: drain everything the feed holds,
+  then stop — the batch-backfill-through-the-streaming-path pattern, so a
+  later live run continues from where the backfill ended with no seam.
+  Spark runs AvailableNow as one micro-batch for a Python source, and the
+  connector's read walks the feed to its end, so one catch-up is one
+  batch (up to ``http_feed._READ_MAX_EVENTS`` events).
 - ``seq`` is minted at ingest from the wire id (``parse_seq_auto``:
   composite ``sequence::uuid`` prefix or UUIDv6 timestamp — the spec's two
   sanctioned encodings, README.md:156-159); opaque ids leave seq null and
   callers fall back to ``operators.feed.mint_seq`` at compaction time.
 - Every derived store folds the landed events after its own cursor — an
   ``offset_scan`` on ``seq``, which landing compaction and retirement keep
-  verbatim — and commits the highest ``seq`` it folded to
-  ``<store>/_cursor`` only after its store write. A crash in between
-  refolds the same range: the id-guarded folds drop what they hold, and
-  the monitor rewrites the unit keyed by the range's start. A landed
-  null-seq row has no position to keep, so a fold refuses it
-  (:class:`NullSeqError`) before any write.
+  verbatim — in ranges of at most ``_FOLD_MAX_ROWS`` rows, and commits the
+  highest ``seq`` it folded to ``<store>/_cursor`` only after its store
+  write. A crash in between refolds the same range: the id-guarded folds
+  drop what they hold, and the monitor rewrites the unit keyed by the
+  range's start. A landed null-seq row has no position to keep, so a fold
+  refuses it (:class:`NullSeqError`) before any write.
 
 100 TB posture: the connector is a serial cursor walk by protocol design
 (see sources/http_feed.py) — the landing zone is where scale-out begins.
 Folds, erasure and a new consumer's bootstrap read it (distributed parquet
 scan), never re-walk HTTP; compaction is the periodic maintenance rewrite
-that keeps bootstrap cost proportional to live subjects, not feed history
-(README.md:184).
+(window per subject, one shuffle) that keeps bootstrap cost proportional
+to live subjects, not feed history (README.md:184).
 """
 
 from __future__ import annotations
@@ -52,16 +56,17 @@ CHECKPOINT_DIR = "_checkpoint"
 COMPACTED_DIR = "compacted"
 # a fold's cursor: the highest landed seq it has folded
 CURSOR_FILE = "_cursor"
-# how long one AvailableNow catch-up may take before it is stopped and
-# reported as a TimeoutError naming the component
+# most landed rows one fold range holds, as http_feed._READ_MAX_EVENTS
+# bounds a micro-batch: a new or lagging store folds its backlog in steps
+_FOLD_MAX_ROWS = 100_000
+# how long one AvailableNow landing catch-up may take before it is
+# stopped and reported as a TimeoutError
 CATCH_UP_TIMEOUT_S = 240.0
 
 
 class NullSeqError(ValueError):
-    """A fold met landed rows without ``seq``. Their wire ids are opaque,
-    so they carry no position a fold cursor could keep across compaction
-    (README.md:150-159): mint seq at ingest or normalize the feed's ids
-    upstream."""
+    """Landed rows without ``seq``: opaque wire ids carry no position a
+    cursor could keep across compaction (README.md:150-159)."""
 
 
 def _paths(landing_root: str) -> tuple[str, str, str]:
@@ -88,10 +93,9 @@ def _read_text(spark: SparkSession, path: str) -> str | None:
 
 
 def _write_text(spark: SparkSession, path: str, body: str) -> None:
-    """Replace a small file atomically: write a dot-named temp beside it,
-    then rename it over `path` (through the Hadoop FS, so checksum
-    sidecars stay consistent). A filesystem whose rename refuses to
-    replace a file gets delete + rename."""
+    """Replace a small file: a dot-named temp beside it, renamed over
+    `path` through the Hadoop FS (checksum sidecars stay consistent);
+    delete + rename where rename refuses to replace."""
     parent, name = path.rstrip("/").rsplit("/", 1)
     fs, final = hadoop_fs(spark, path)
     _, tmp = hadoop_fs(spark, f"{parent}/.{name}.tmp")
@@ -102,16 +106,6 @@ def _write_text(spark: SparkSession, path: str, body: str) -> None:
         fs.delete(final, False)
         if not fs.rename(tmp, final):
             raise IOError(f"could not move {tmp} to {path}")
-
-
-def _drain(q, label: str) -> None:
-    """Wait for an AvailableNow query to finish; stop it and raise when
-    it overruns :data:`CATCH_UP_TIMEOUT_S`."""
-    if not q.awaitTermination(CATCH_UP_TIMEOUT_S):
-        q.stop()
-        raise TimeoutError(
-            f"{label} catch-up did not drain the feed within {CATCH_UP_TIMEOUT_S}s"
-        )
 
 
 def _uncommitted_batch(spark: SparkSession, ckpt: str) -> bool:
@@ -129,18 +123,15 @@ def _uncommitted_batch(spark: SparkSession, ckpt: str) -> bool:
 
 def _fold_landing(spark: SparkSession, landing_root: str, root: str, fold) -> None:
     """One catch-up of a derived store at `root`: ``fold(rows, cursor)``
-    gets a snapshot of the events landed after the store's cursor, and
-    the cursor moves to their highest ``seq`` only after ``fold``
-    returns. A crash in between refolds the same range on the next call;
-    every fold here absorbs that (module docstring). Null-seq rows raise
-    :class:`NullSeqError` before ``fold`` runs.
-
-    One job: the snapshot's materialization, which also observes the
-    range's end and its null-seq count. The snapshot is one partition,
-    as a feed micro-batch is, so the folds' per-id reductions plan
-    without a shuffle."""
-    from pyspark.sql import Observation
-
+    gets the events landed after the store's cursor in seq ranges of at
+    most :data:`_FOLD_MAX_ROWS` rows, each one partition (as a feed
+    micro-batch is, so per-id reductions plan without a shuffle), and
+    the cursor moves to a range's end only after ``fold`` returns. A
+    retry cuts the same ranges from the committed cursor. Null-seq rows
+    raise :class:`NullSeqError` before ``fold`` runs. Reading the
+    snapshot's size, end and null count materialises it (two jobs: the
+    aggregate's shuffle map stage, then its result); finding a range's
+    end costs one more job per range when the backlog exceeds one."""
     feed = or_none(lambda: _full_feed(spark, landing_root))
     if feed is None:
         return
@@ -150,20 +141,31 @@ def _fold_landing(spark: SparkSession, landing_root: str, root: str, fold) -> No
     rows = ops.offset_scan(feed, cursor)
     if cursor is not None:  # the range predicate drops null seqs
         rows = rows.unionByName(feed.where(F.col("seq").isNull()))
-    seen = Observation()
-    nulls = F.count_if(F.col("seq").isNull()).alias("nulls")
-    rows = rows.observe(seen, F.max("seq").alias("hi"), nulls).localCheckpoint().coalesce(1)
-    hi, nulls = seen.get["hi"], seen.get["nulls"]
+    # not an Observation: once a session holds one, Spark's observation
+    # listener logs every later failed query (an absent-path probe) as
+    # an ERROR with its stack trace
+    rows = rows.localCheckpoint(eager=False)
+    hi, n, nulls = rows.agg(
+        F.max("seq"), F.count(F.lit(1)), F.count_if(F.col("seq").isNull())
+    ).first()
     if nulls:
         raise NullSeqError(
             f"{nulls} rows landed under {landing_root} have no seq (opaque "
             "event ids): a fold cursor needs positions — mint seq at ingest "
             "or normalize the feed's ids upstream"
         )
-    if hi is None:
-        return
-    fold(rows, cursor)
-    _write_text(spark, cursor_path, str(hi))
+    while hi is not None:
+        end = hi
+        if n > _FOLD_MAX_ROWS:
+            # the range's end: the _FOLD_MAX_ROWS-th lowest seq left
+            nth = rows.select("seq").orderBy("seq").offset(_FOLD_MAX_ROWS - 1).first()
+            end = nth.seq if nth is not None else hi
+        fold(rows.where(F.col("seq") <= end).coalesce(1), cursor)
+        _write_text(spark, cursor_path, str(end))
+        if end == hi:
+            return
+        cursor, n = end, n - _FOLD_MAX_ROWS
+        rows = rows.where(F.col("seq") > end)
 
 
 def _docs(rows: DataFrame, doc_id_field: str, text_field: str) -> DataFrame:
@@ -245,7 +247,12 @@ def run(
     # single-batch AvailableNow (its fallback for Python sources) only
     # re-runs that batch; a second trigger walks on to the feed end
     for _ in range(1 + _uncommitted_batch(spark, ckpt)):
-        _drain(writer.trigger(availableNow=True).start(), "landing")
+        q = writer.trigger(availableNow=True).start()
+        if not q.awaitTermination(CATCH_UP_TIMEOUT_S):
+            q.stop()
+            raise TimeoutError(
+                f"landing catch-up did not drain the feed within {CATCH_UP_TIMEOUT_S}s"
+            )
     summary = {"landing_root": landing_root, "raw_rows": _count_or_zero(spark, raw)}
     if compact:
         if summary["raw_rows"] == 0:
@@ -301,10 +308,13 @@ def run_ann_index(
     Bootstrap-then-upsert: the first non-empty range against an ABSENT
     index trains the coarse quantizer from itself (build_index); every
     later range is a frozen-quantizer ``upsert_vectors`` append, whose
-    per-id anti-join absorbs a refold. Centroid drift vs the growing
-    corpus is the documented upsert trade (see ann_index.upsert_vectors);
-    rebuilding is the caller's policy. Returns
-    {"index_root", "indexed_vectors"}."""
+    per-id anti-join absorbs a refold. The build-vs-upsert branch is
+    re-decided per range from index PRESENCE, so a refolded bootstrap
+    range lands on the upsert path and no-ops. Centroid drift vs the
+    growing corpus is the documented upsert trade (recall degrades
+    gracefully, correctness never — see ann_index.upsert_vectors);
+    periodic ``build_index`` over the landed corpus is the caller's
+    rebuild policy. Returns {"index_root", "indexed_vectors"}."""
     from http_feeds_spark.operators import ann_index as ai
 
     root = index_root.rstrip("/")
@@ -332,7 +342,8 @@ def run_media_index(
     """Landing zone → persisted media store: the MEDIA sibling of
     :func:`run_dedup_index`. The (doc_id, payload) binary documents
     landed after the store's cursor — the payload rides the feed
-    base64-encoded under ``payload_field`` — fold into the media store
+    base64-encoded under ``payload_field`` (CloudEvents ``data`` is
+    JSON; base64 is its binary convention) — fold into the media store
     (streaming/media.fold_batch): router metadata plus pixel-phash and
     audio constellation rows for decodable payloads. fold_batch's
     per-doc-id anti-join absorbs a refold; events without the fields
@@ -406,7 +417,9 @@ def run_text_index(
     so the corpus becomes BM25-searchable as it arrives. The upsert's
     per-doc-id anti-join absorbs a refold (:func:`_fold_landing`); a
     batch torn mid-write has no _SUCCESS marker and stays invisible
-    until the retry overwrites it. Returns {"index_root", "indexed_docs"}."""
+    until the retry overwrites it; a crash between batch commit and the
+    derived-store rewrite is healed at search time (text_index module
+    docstring). Returns {"index_root", "indexed_docs"}."""
     from http_feeds_spark.operators import text_index as ti
     root = index_root.rstrip("/")
 
@@ -418,13 +431,8 @@ def run_text_index(
             ti.upsert_documents(spark, docs, index_root)
 
     _fold_landing(spark, landing_root, root, _fold)
-    meta = f"{root}/{ti.META_DIR}"
-    n = (
-        int(spark.read.parquet(meta).collect()[0].n_docs)
-        if parquet_exists(spark, meta)
-        else 0
-    )
-    return {"index_root": index_root, "indexed_docs": n}
+    meta = or_none(lambda: spark.read.parquet(f"{root}/{ti.META_DIR}").first())
+    return {"index_root": index_root, "indexed_docs": int(meta.n_docs) if meta else 0}
 
 
 def run_pq_index(
@@ -442,8 +450,10 @@ def run_pq_index(
     """Landing zone → persisted IVF+PQ index: the compressed twin of
     :func:`run_ann_index` — bootstrap trains quantizer + codebooks from
     the first non-empty range, every later range is a frozen-model
-    ``pq_index.upsert_vectors`` append whose per-id idempotence absorbs
-    a refold. Returns {"index_root", "indexed_vectors"}."""
+    ``pq_index.upsert_vectors`` append (map-only encode) whose per-id
+    idempotence absorbs a refold. Codebook drift vs the growing corpus
+    is the documented frozen-model trade; rebuild policy is the
+    caller's. Returns {"index_root", "indexed_vectors"}."""
     from http_feeds_spark.operators import pq_index as pqi
 
     root = index_root.rstrip("/")
@@ -496,11 +506,17 @@ def run_erasure(
     same erase set; already-recorded ids are dropped by erase_ids and an
     already-purged store has no affected partitions.
 
-    The RAW landing zone is a streaming sink whose commit log owns file
-    visibility, so it is not rewritten here: a deleted subject's content
-    never enters the compacted copy, and raw ages out wholesale by
-    retention (README.md:184). Returns the per-store counts from
-    propagate_erasure plus {"erase_ids": n}."""
+    Landing-zone scope: the RAW landing zone is a parquet STREAMING sink
+    — its ``_spark_metadata`` commit log owns file visibility, so an
+    in-place rewrite would orphan the log (the next micro-batch would
+    re-create it listing only new files, hiding the retained history
+    from every log-aware read). Its erasure story is therefore the
+    spec's own (README.md:184, :270-292): serve from the COMPACTED copy
+    (``compact_now`` — a deleted subject's content never enters it) and
+    age raw files out wholesale on a retention window; this function
+    covers the DERIVED stores, where targeted physical deletion is
+    possible. Returns the per-store counts from propagate_erasure plus
+    {"erase_ids": n}."""
     from http_feeds_spark.operators import erasure
 
     feed = or_none(lambda: _full_feed(spark, landing_root))
@@ -536,7 +552,6 @@ def run_platform(
     url: str,
     platform_root: str,
     *,
-    landing: bool = True,
     text_index: bool = True,
     dedup_index: bool = True,
     monitor: bool = True,
@@ -566,34 +581,48 @@ def run_platform(
              → erasure propagation (DELETE tombstones logically erased
                everywhere, physically purged when ``purge``)
 
-    The landing catch-up is the wave's only HTTP walk and only streaming
-    query (``landing=False`` skips it; the folds then read a landing zone
-    another process keeps at ``<platform_root>/landing``). Each other
-    component keeps its own store + landed-``seq`` cursor under
+    The landing catch-up into ``<platform_root>/landing`` is the wave's
+    only HTTP walk and only streaming query. Each other component keeps
+    its own store + landed-``seq`` cursor under
     ``<platform_root>/<name>`` and is individually idempotent (per-id
-    guards, cursor-keyed units, snapshot-cleared ledgers), so re-running after ANY partial failure resumes each from
-    its own cursor and converges — there is no cross-component
-    transaction to tear. The monitor holds aggregates, not subject rows,
-    so it is outside per-subject erasure.
+    guards, cursor-keyed units, snapshot-cleared ledgers), so the
+    composition is too: re-running after ANY partial failure resumes
+    each component from its own cursor and converges — there is no
+    cross-component transaction to tear. Call it on a schedule and the
+    platform follows the feed.
+
+    Erasure scope: the monitor holds AGGREGATES (counts, unigram count
+    frames, HLL sketches), not subject rows — like k-means centroids,
+    they are outside per-subject erasure; the raw landing zone's story
+    is compaction + retention (see run_erasure).
 
     ``retire_below_seq`` runs :func:`retire_landing_history` after the
     folds and erasure, so nothing rewrites raw before this wave's
     consumers have read it (pass the minimum cursor across consumers
-    that still bootstrap from raw). ``compact_after`` (default 16; None
-    disables) runs :func:`run_maintenance` next, which bounds the
-    batch/unit/file counts the folds accumulate. Then, unless
-    ``record_epochs=False``, every component's read frontier is
-    committed as ``<root>/epochs/<n>`` (http_feeds_spark/epochs.py): a
-    reader that pins epoch N sees every store at wave N while wave N+1
-    lands. ``verify=True`` runs :func:`operators.fsck.fsck_platform`
+    that still bootstrap from raw).
+
+    Store maintenance: every fold appends one posting batch / monitor
+    unit, so a platform following a feed accumulates one directory per
+    catch-up forever unless something merges the prefix. So
+    :func:`run_maintenance` runs next: a store whose visible batch/unit
+    count exceeds ``compact_after`` (default 16; None disables, for
+    callers scheduling maintenance at their own granularity) is
+    compacted and vacuumed, crash-safe and answers bit-identical.
+
+    Epochs (r9): after a successful wave (and after maintenance, so the
+    recorded frontier survives it) every component's read frontier is
+    committed as ``<root>/epochs/<n>`` (http_feeds_spark/epochs.py) —
+    a reader that pins epoch N sees EVERY store at wave N while wave
+    N+1 lands concurrently: the platform's cross-store consistency
+    token without a cross-component transaction. ``record_epochs=False``
+    disables. ``verify=True`` runs :func:`operators.fsck.fsck_platform`
     last; its report rides the summary under ``"fsck"``, and a
     MUST-BE-ZERO violation raises :class:`PlatformVerifyError`. Returns
     the per-component summaries (+ the epoch record)."""
     root = platform_root.rstrip("/")
     land = f"{root}/landing"
     out: dict = {"platform_root": platform_root}
-    if landing:
-        out["landing"] = run(spark, url, land, compact=compact)
+    out["landing"] = run(spark, url, land, compact=compact)
     kw = dict(doc_id_field=doc_id_field, text_field=text_field)
     if text_index:
         out["text_index"] = run_text_index(spark, land, f"{root}/text_index", **kw)
@@ -638,7 +667,7 @@ def run_platform(
 
             sd.rebuild_assignment(spark, f"{root}/dedup_index")
             out["erasure"]["dedup_clusters_rebuilt"] = True
-    if landing and retire_below_seq is not None and out["landing"]["raw_rows"]:
+    if retire_below_seq is not None and out["landing"]["raw_rows"]:
         # the spec's retention story from the one-call API: raw ages out
         # below the caller's horizon (the minimum cursor across consumers
         # bootstrapping from raw), compacted serves history. Last among
@@ -656,7 +685,6 @@ def run_platform(
             ann_index=ann_index,
             pq_index=pq_index,
             media_index=media_index,
-            landing=landing,
             compact_after=compact_after,
         )
     if record_epochs:
@@ -681,9 +709,12 @@ def run_platform(
 
 class PlatformVerifyError(RuntimeError):
     """run_platform(verify=True) found fsck invariant violations after
-    the wave. Carries the full wave summary (``.summary``) and the
-    complete fsck_platform report (``.report``), so the whole audit
-    survives the raise."""
+    the wave. Carries the FULL wave summary (``.summary``) and the
+    complete fsck_platform report (``.report``) so operators get the
+    whole audit — per-store families, warnings, clean list — not just
+    the violations line, even though the wave raised instead of
+    returning. A RuntimeError subclass: pre-r12 callers that caught
+    RuntimeError keep working."""
 
     def __init__(self, summary: dict):
         self.summary = summary
@@ -730,10 +761,15 @@ def run_maintenance(
     granularity should disable here and schedule compact_batches at the
     granularity they keep (e.g. daily).
 
-    The text index merges SIZE-TIERED first (each byte rewritten
-    O(log store) times), with the full-prefix merge as the fallback
-    that guarantees the ``compact_after`` bound; the monitor's units are
-    model-sized aggregates, so it keeps the simple full-prefix merge.
+    Text-index write amplification: the policy is SIZE-TIERED first
+    (compact_postings_tiered — only ≥min_run runs of the same size
+    class merge, so each byte is rewritten O(log store) times over its
+    lifetime and settled large batches are never churned), with the
+    full-prefix merge as the fallback that guarantees the
+    ``compact_after`` bound when tiering's steady state (min_run ×
+    size classes) still exceeds it. The monitor keeps the simple
+    full-prefix merge: its units are model-sized aggregate frames, not
+    corpus bytes, so amplification there is noise.
 
     Returns per-store {"batches_before", "batches_after", "vacuumed"}
     (absent stores count 0 and are skipped)."""
@@ -747,6 +783,11 @@ def run_maintenance(
         before = ti.visible_batches(spark, ti_root)
         summary = {"batches_before": len(before), "batches_after": len(before)}
         if len(before) > compact_after:
+            # size-tiered first (LSM write-amplification bound: settled
+            # large batches are not rewritten until enough same-sized
+            # peers accumulate); full-prefix merge only as the fallback
+            # that guarantees the compact_after bound when tiering's
+            # steady state (min_run x size classes) still exceeds it
             after = ti.compact_postings_tiered(spark, ti_root)
             if len(after) > compact_after:
                 after = ti.compact_postings(spark, ti_root, upto=max(after))
@@ -769,19 +810,21 @@ def run_maintenance(
     # the append-partitioned stores (dedup buckets, ANN/PQ clusters, media
     # buckets) gain one FILE-SET per fold/upsert rather than new batch
     # dirs — their bound is files per partition dir, not batch count
-    import importlib
+    from http_feeds_spark.operators import ann_index as ai
+    from http_feeds_spark.operators import pq_index as pqi
+    from http_feeds_spark.streaming import dedup as sd
+    from http_feeds_spark.streaming import media as smedia
 
-    for name, enabled, module, data_dir in [
-        ("dedup_index", dedup_index, "streaming.dedup", "SHINGLES_DIR"),
-        ("ann_index", ann_index, "operators.ann_index", "CORPUS_DIR"),
-        ("pq_index", pq_index, "operators.pq_index", "CODES_DIR"),
-        ("media_index", media_index, "streaming.media", "META_DIR"),
+    for name, enabled, mod, data_dir in [
+        ("dedup_index", dedup_index, sd, sd.SHINGLES_DIR),
+        ("ann_index", ann_index, ai, ai.CORPUS_DIR),
+        ("pq_index", pq_index, pqi, pqi.CODES_DIR),
+        ("media_index", media_index, smedia, smedia.META_DIR),
     ]:
         if not enabled:
             continue
-        mod = importlib.import_module(f"http_feeds_spark.{module}")
         store = f"{root}/{name}"
-        probe = f"{store}/{getattr(mod, data_dir)}"
+        probe = f"{store}/{data_dir}"
         files, dirs = data_file_stats(spark, probe)
         if not files:
             continue
@@ -1027,9 +1070,8 @@ def retention_horizon(spark: SparkSession, landing_root: str) -> int | None:
     have been aged out wholesale and live ONLY in the compacted copy.
     None = no retirement has ever run (raw is self-sufficient)."""
     path = f"{landing_root.rstrip('/')}/{RETENTION_DIR}"
-    if not parquet_exists(spark, path):
-        return None
-    return int(spark.read.parquet(path).collect()[0].horizon_seq)
+    row = or_none(lambda: spark.read.parquet(path).first())
+    return None if row is None else int(row.horizon_seq)
 
 
 def _full_feed(spark: SparkSession, landing_root: str) -> DataFrame:
@@ -1127,8 +1169,9 @@ def retire_landing_history(
 
 
 def _count_or_zero(spark: SparkSession, path: str) -> int:
-    """Row count of a parquet dataset; 0 while nothing is there (a first
-    catch-up against a still-empty feed — a normal deployment order)."""
+    """Row count of a parquet dataset; 0 when the sink has committed no
+    data files yet (first catch-up against a still-empty feed writes only
+    the sink's metadata log — a normal deployment order, not an error)."""
     return or_none(lambda: spark.read.parquet(path).count()) or 0
 
 

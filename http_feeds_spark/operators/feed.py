@@ -18,6 +18,8 @@ schema (http_feeds_spark.schema.ENVELOPE). Spec citations are to
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -104,6 +106,17 @@ def parse_seq_uuid6(df: DataFrame, id_col: str = "id") -> DataFrame:
 
 
 _UUID6_RE = r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-6[0-9a-fA-F]{3}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
+
+
+def seq_of(event_id: str | None) -> int | None:
+    """The ``seq`` :func:`parse_seq_auto` lands for one wire id, in
+    Python (the connector orders a page by it before landing)."""
+    head, sep, _ = (event_id or "").partition("::")
+    if sep:
+        return int(head) if head.isascii() and head.isdigit() else None
+    if re.match(_UUID6_RE, head):
+        return int(head[:8] + head[9:13] + head[15:18], 16)
+    return None
 
 
 def parse_seq_auto(df: DataFrame, id_col: str = "id") -> DataFrame:

@@ -41,7 +41,6 @@ from __future__ import annotations
 import email.utils
 import http.client
 import json
-import re
 import time
 import urllib.error
 import urllib.parse
@@ -57,28 +56,10 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from http_feeds_spark.operators.feed import seq_of
 from http_feeds_spark.schema import WIRE_ENVELOPE
 
 FIELDS = [f.name for f in WIRE_ENVELOPE.fields]
-
-
-_UUID6 = re.compile(r"[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-6[0-9a-fA-F]{3}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}")
-
-
-def _seq_or_none(event_id: str | None) -> int | None:
-    """The position an id encodes, as ``operators.feed.parse_seq_auto``
-    reads it: the numeric prefix of a composite ``sequence::uuid`` id
-    (README.md:159) or the 60-bit timestamp of a UUIDv6 (README.md:156);
-    None for opaque ids."""
-    if not event_id:
-        return None
-    if _UUID6.fullmatch(event_id):
-        return int(event_id[:8] + event_id[9:13] + event_id[15:18], 16)
-    head = event_id.split("::", 1)[0]
-    try:
-        return int(head)
-    except ValueError:
-        return None
 
 
 def _parse_time(v: str | None):
@@ -129,10 +110,8 @@ _READ_MAX_EVENTS = 100_000
 
 
 class FeedContractError(RuntimeError):
-    """The server broke the feed contract (README.md:12, :300, :309): a
-    page that does not move past the cursor, or whose events lack ids,
-    repeat one or go back in position. ``cursor`` is the lastEventId
-    the page was requested with."""
+    """The server broke the feed contract (README.md:12, :300, :309) in
+    the page asked for past ``cursor`` (see :func:`_check_page`)."""
 
     def __init__(self, message: str, cursor: str | None):
         self.cursor = cursor
@@ -140,12 +119,11 @@ class FeedContractError(RuntimeError):
 
 
 def _check_page(cursor: str | None, events: list) -> None:
-    """Raise :class:`FeedContractError` unless a non-empty page is a
-    well-formed step past `cursor`: every element an object with a
-    string id, no id twice, the last id not the cursor, and the
-    positions of composite and UUIDv6 ids (README.md:156-159) strictly
-    increasing from the cursor's. A walk that accepted such a page
-    would refetch it forever, land events twice, or out of order."""
+    """Raise :class:`FeedContractError` unless a non-empty page steps
+    past `cursor`: objects with string ids, none twice, the last not the
+    cursor, and composite / UUIDv6 positions (``seq_of``) strictly
+    increasing from the cursor's. A walk that accepted such a page would
+    refetch it forever, or land events twice or out of order."""
     if not all(isinstance(e, dict) and isinstance(e.get("id"), str) for e in events):
         raise FeedContractError("feed page holds an event without a string id", cursor)
     ids = [e["id"] for e in events]
@@ -153,8 +131,8 @@ def _check_page(cursor: str | None, events: list) -> None:
         raise FeedContractError("feed page repeats an event id", cursor)
     if ids[-1] == cursor:
         raise FeedContractError("feed page ends at the cursor it was asked past", cursor)
-    last = _seq_or_none(cursor)
-    for pos in (p for p in map(_seq_or_none, ids) if p is not None):
+    last = seq_of(cursor)
+    for pos in (p for p in map(seq_of, ids) if p is not None):
         if last is not None and pos <= last:
             raise FeedContractError(
                 f"feed page position {pos} does not follow position {last}", cursor
@@ -297,21 +275,21 @@ class HttpFeedStreamReader(SimpleDataSourceStreamReader):
         # server honors the START position even if the cursor event was
         # deleted (README.md:150-154) — and the spec equally allows the
         # END-offset event to be compacted away between the original batch
-        # and this replay. So termination is by POSITION (the ordered
-        # numeric prefix of composite ids, README.md:159), not identity:
+        # and this replay. So termination is by POSITION (seq_of: composite
+        # prefix or UUIDv6 timestamp, README.md:156-159), not identity:
         # stop once an event at or past the end position was returned, and
         # never emit events past it (they belong to later batches — an
         # identity-only loop would replay them as duplicates). Opaque
-        # (non-composite) ids fall back to the identity match.
+        # ids fall back to the identity match.
         cursor = start.get("lastEventId")
         stop = end.get("lastEventId")
-        stop_pos = _seq_or_none(stop)
+        stop_pos = seq_of(stop)
         out: list[tuple] = []
         if cursor == stop:
             return iter(out)
         for page in _pages(self.url, cursor, use_cache=True):
             for e in page:
-                pos = _seq_or_none(e["id"])
+                pos = seq_of(e["id"])
                 if stop_pos is not None and pos is not None and pos > stop_pos:
                     return iter(out)
                 out.append(_event_to_row(e))

@@ -462,7 +462,7 @@ def compact_batches(
     # commit point: the manifest's _SUCCESS flips the view atomically
     spark.createDataFrame(
         [(int(keep_new), [int(b) for b in covered_new])],
-        "keep_id int, covered array<int>",
+        "keep_id bigint, covered array<bigint>",
     ).coalesce(1).write.mode("overwrite").parquet(
         f"{root}/{MANIFEST_DIR}/{new_gen:06d}"
     )

@@ -279,10 +279,29 @@ def test_uuid6_positions_are_checked():
     """UUIDv6 ids carry their position in the leading 60 timestamp bits
     (the key ``parse_seq_auto`` lands as seq); a page going back in it
     is refused like a composite one."""
-    from http_feeds_spark.sources.http_feed import FeedContractError, _check_page, _seq_or_none
+    from http_feeds_spark.operators.feed import seq_of
+    from http_feeds_spark.sources.http_feed import FeedContractError, _check_page
 
     early, late = "1ec9414c-232a-6b00-b3c8-9e6bdeced846", "1ec9414c-232b-6b00-b3c8-9e6bdeced846"
-    assert _seq_or_none(early) == int("1ec9414c232ab00", 16) < _seq_or_none(late)
+    assert seq_of(early) == int("1ec9414c232ab00", 16) < seq_of(late)
     _check_page(None, [{"id": early}, {"id": late}])
     with pytest.raises(FeedContractError, match="does not follow"):
         _check_page(None, [{"id": late}, {"id": early}])
+
+
+def test_connector_positions_match_landed_seq(spark):
+    """The connector checks a page's order by the same position
+    ``parse_seq_auto`` lands as seq: composite prefix, UUIDv6 timestamp,
+    and none for an opaque id, a bare decimal one included."""
+    from http_feeds_spark.operators.feed import parse_seq_auto, seq_of
+
+    ids = [
+        "0000000000042::5f8de8ff-a48c-4e62-9b8a-2a1b1e0f3c11",
+        "1ec9414c-232a-6b00-b3c8-9e6bdeced846",
+        "42",
+        "b1946ac9-4d3c-4b40-9c9d-000000000002",
+    ]
+    landed = parse_seq_auto(spark.createDataFrame([(i,) for i in ids], "id string"))
+    assert {r.id: r.seq for r in landed.collect()} == {i: seq_of(i) for i in ids}
+    assert [seq_of(i) for i in ids] == [42, int("1ec9414c232ab00", 16), None, None]
+

@@ -2,7 +2,8 @@
 HTTP consumer, and every derived store folds the landed events after
 its own ``seq`` cursor. Pinned here: the cursor survives landing
 compaction and retirement, a crash between a fold's store write and its
-cursor commit refolds without double counting, null-seq rows are refused
+cursor commit refolds without double counting, a backlog past one range
+folds in bounded ranges, null-seq rows are refused
 before any write, a catch-up after a crash between the landing's offset
 and commit writes still reaches the feed end in one call, and a
 retirement horizon past a same-wave DELETE still lets erasure see it."""
@@ -104,6 +105,43 @@ def test_crash_before_cursor_commit_refolds_without_double_count(
     assert mon.visible_units(spark, f"{root}/monitor") == units
 
 
+def test_backlog_larger_than_a_range_folds_in_bounded_ranges(
+    spark, feed, tmp_path, monkeypatch
+):
+    """A backlog past ``_FOLD_MAX_ROWS`` folds as several seq ranges of
+    at most that many rows, committing the cursor after each. A crash
+    before one range's cursor commit refolds from the last committed
+    cursor, so the monitor rewrites the same unit: nothing is missed or
+    counted twice."""
+    state, url = feed
+    landing, root = str(tmp_path / "landing"), str(tmp_path / "stores")
+    monkeypatch.setattr(ingest, "_FOLD_MAX_ROWS", 4)
+    _docs(state, range(10))
+    ingest.run(spark, url, landing)
+
+    write_text, cursors = ingest._write_text, []
+
+    def crash_on_second_cursor(spark_, path, body):
+        if path.endswith(ingest.CURSOR_FILE):
+            cursors.append(int(body))
+            if len(cursors) == 2:
+                raise RuntimeError("crash before the cursor commit")
+        write_text(spark_, path, body)
+
+    monkeypatch.setattr(ingest, "_write_text", crash_on_second_cursor)
+    with pytest.raises(RuntimeError, match="crash before the cursor commit"):
+        ingest.run_monitor(spark, landing, f"{root}/monitor")
+    monkeypatch.setattr(ingest, "_write_text", write_text)
+
+    assert _fold_all(spark, landing, root) == {"text": 10, "dedup": 10, "monitor": 10}
+    stats = mon.read_stats(spark, f"{root}/monitor").orderBy("batch").collect()
+    assert [r.n_docs for r in stats] == [4, 4, 2]
+    assert [r.batch for r in stats] == [0, cursors[0] + 1, cursors[1] + 1]
+    last = max(r.seq for r in spark.read.parquet(f"{landing}/raw").collect())
+    for store in ("text", "dedup", "monitor"):
+        assert int(open(f"{root}/{store}/{ingest.CURSOR_FILE}").read()) == last
+
+
 @pytest.mark.parametrize("fold", ["run_text_index", "run_dedup_index", "run_monitor"])
 def test_null_seq_row_is_refused_before_any_write(spark, tmp_path, fold):
     """A landed row whose id is opaque has no seq, so no position a fold
@@ -164,7 +202,8 @@ def test_retire_horizon_past_same_wave_delete_still_erases(spark, feed, tmp_path
 
 def test_monitor_units_and_epochs_hold_uuid6_sized_positions(spark, tmp_path):
     """UUIDv6 positions are 60-bit timestamps: the monitor unit keyed by
-    such a cursor, and the epoch that records it, keep it as a long."""
+    such a cursor, the epoch that records it and the compaction manifest
+    that covers it keep it as a long."""
     from http_feeds_spark import epochs
 
     landing, root = str(tmp_path / "landing"), str(tmp_path / "platform")
@@ -185,3 +224,15 @@ def test_monitor_units_and_epochs_hold_uuid6_sized_positions(spark, tmp_path):
     assert rec["monitor_units"] == [0, base + 3]
     pinned = epochs.pin(spark, root, rec["epoch"]).monitor_stats()
     assert sorted(r.batch for r in pinned.collect()) == [0, base + 3]
+
+    # maintenance merges both units: the manifest's covered ids hold the
+    # 60-bit position, and the merged unit reads back under keep id 0
+    out = ingest.run_maintenance(
+        spark, root, text_index=False, dedup_index=False, landing=False, compact_after=1
+    )
+    assert out["monitor"]["batches_after"] == 1
+    land([base + 4])
+    assert ingest.run_monitor(spark, landing, f"{root}/monitor")["n_docs"] == 4
+    stats = mon.read_stats(spark, f"{root}/monitor").orderBy("batch").collect()
+    assert [(r.batch, r.n_docs) for r in stats] == [(0, 3), (base + 4, 1)]
+    assert epochs.record_epoch(spark, root)["monitor_units"] == [0, base + 4]
