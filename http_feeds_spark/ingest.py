@@ -1070,7 +1070,9 @@ def retention_horizon(spark: SparkSession, landing_root: str) -> int | None:
     have been aged out wholesale and live ONLY in the compacted copy.
     None = no retirement has ever run (raw is self-sufficient)."""
     path = f"{landing_root.rstrip('/')}/{RETENTION_DIR}"
-    row = or_none(lambda: spark.read.parquet(path).first())
+    if not parquet_exists(spark, path):
+        return None
+    row = spark.read.parquet(path).first()
     return None if row is None else int(row.horizon_seq)
 
 

@@ -77,6 +77,12 @@ def get_spark(
         # worker fork/connect-back path headroom under load (default 15s)
         .config("spark.python.authenticate.socketTimeout", "120s")
     )
+    if master.startswith("local"):
+        # one JVM: a "parallel" partition discovery runs the same Hadoop
+        # listing on this JVM's executor threads, plus one task per path
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

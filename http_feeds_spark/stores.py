@@ -1,9 +1,13 @@
 """Parquet store probing shared by the persistent index modules
 (streaming/dedup.py, operators/ann_index.py).
 
-Index roots at 100 TB are object stores, so presence checks must go
-through Spark's reader (any Hadoop-supported filesystem), never the
-local-FS ``os.path`` calls that only work on the driver's disk.
+Index roots at 100 TB are object stores, so presence checks go through
+the Hadoop FileSystem API (any Hadoop-supported filesystem), never the
+local-FS ``os.path`` calls that only work on the driver's disk. They
+are driver-side listings: no Spark job runs to learn whether a store
+exists. A streaming sink directory is the exception: its
+``_spark_metadata`` log, not the listing, decides which files are
+visible, so read a sink through ``or_none``, never ``parquet_exists``.
 """
 
 from __future__ import annotations
@@ -30,9 +34,12 @@ def committed(spark: SparkSession, path: str) -> bool:
 
 
 def parquet_exists(spark: SparkSession, path: str) -> bool:
-    """True when `path` is a readable parquet dataset. Probed through
-    Spark's reader (footer/schema only — no data scan) so the check
-    works on ANY Hadoop-supported filesystem (s3://, hdfs://, local).
+    """True when `path` is a readable parquet dataset: it holds at least
+    one data file that Spark's reader would see. A driver-side walk
+    through the Hadoop FS (``_data_files``) that stops at the first such
+    file, so the check runs no Spark job and works on ANY Hadoop-
+    supported filesystem (s3://, hdfs://, local). Not for streaming sink
+    directories (see the module docstring).
 
     Only a definitive store-absent answer maps to False; any OTHER
     failure (transient object-store error, permissions) propagates.
@@ -40,7 +47,7 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
     that mistakes a transient read error for "no index yet" would skip
     its idempotence anti-join and rebuild from one batch's data,
     silently destroying prior state."""
-    return or_none(lambda: spark.read.parquet(path).schema) is not None
+    return next(_data_files(spark, path), None) is not None
 
 
 def or_none(read):
@@ -58,16 +65,15 @@ def or_none(read):
         raise
 
 
-def list_data_files(spark: SparkSession, store_path: str) -> list[str]:
-    """Every data file under a parquet store, recursively (partition
-    dirs included), sorted — the exact-file frontier a platform epoch
-    pins (epochs.py). Skips committer/metadata names (``_SUCCESS``,
-    dot-files). Metadata-only: one recursive listing, no data read.
-    Returns [] when the store is absent."""
-    fs, root = hadoop_fs(spark, store_path)
+def _data_files(spark: SparkSession, path: str):
+    """Lazily yield the FileStatus of every data file under `path`,
+    recursively (partition dirs included). Skips ``_``- and ``.``-
+    prefixed names at every level, as Spark's file index does
+    (``_SUCCESS``, ``_temporary/``, ``.crc`` files). Yields nothing
+    when `path` is absent; any other Hadoop error propagates."""
+    fs, root = hadoop_fs(spark, path)
     if not fs.exists(root):
-        return []
-    out: list[str] = []
+        return
     stack = [root]
     while stack:
         for st in fs.listStatus(stack.pop()):
@@ -77,8 +83,16 @@ def list_data_files(spark: SparkSession, store_path: str) -> list[str]:
             if st.isDirectory():
                 stack.append(st.getPath())
             else:
-                out.append(st.getPath().toString())
-    return sorted(out)
+                yield st
+
+
+def list_data_files(spark: SparkSession, store_path: str) -> list[str]:
+    """Every data file under a parquet store, recursively (partition
+    dirs included), sorted — the exact-file frontier a platform epoch
+    pins (epochs.py). Skips committer/metadata names (``_SUCCESS``,
+    dot-files). Metadata-only: one recursive listing, no data read.
+    Returns [] when the store is absent."""
+    return sorted(st.getPath().toString() for st in _data_files(spark, store_path))
 
 
 def read_pinned_files(spark: SparkSession, base_path: str, files: list[str], what: str):

@@ -20,3 +20,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the slow tier the default run leaves out, so it is never
+    invisible in a summary."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slow") is not None
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow tests deselected; run them with: python -m pytest tests/ -m slow"
+        )
