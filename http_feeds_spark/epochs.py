@@ -50,27 +50,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from http_feeds_spark.stores import committed, hadoop_fs
+from http_feeds_spark.stores import committed_dirs, hadoop_fs, parquet_exists
 
 EPOCHS_DIR = "epochs"
 
 
-def _epoch_dirs(spark: SparkSession, platform_root: str) -> list[tuple[int, str]]:
-    root = f"{platform_root.rstrip('/')}/{EPOCHS_DIR}"
-    fs, jroot = hadoop_fs(spark, root)
-    if not fs.exists(jroot):
-        return []
-    out = []
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.isdigit() and committed(spark, st.getPath().toString()):
-            out.append((int(name), st.getPath().toString()))
-    return sorted(out)
-
-
 def list_epochs(spark: SparkSession, platform_root: str) -> list[int]:
     """Committed epoch numbers, ascending."""
-    return [n for n, _ in _epoch_dirs(spark, platform_root)]
+    return [n for n, _ in committed_dirs(spark, f"{platform_root.rstrip('/')}/{EPOCHS_DIR}")]
 
 
 def _capture_frontiers(spark: SparkSession, root: str) -> dict:
@@ -82,7 +69,6 @@ def _capture_frontiers(spark: SparkSession, root: str) -> dict:
     from http_feeds_spark.operators import ann_index as ai
     from http_feeds_spark.operators import pq_index as pqi
     from http_feeds_spark.operators import text_index as ti
-    from http_feeds_spark.stores import parquet_exists
     from http_feeds_spark.streaming import dedup as sd
     from http_feeds_spark.streaming import monitor as mon
 
@@ -90,7 +76,7 @@ def _capture_frontiers(spark: SparkSession, root: str) -> dict:
     if parquet_exists(spark, f"{root}/text_index/{ti.META_DIR}"):
         text_batches = ti.visible_batches(spark, f"{root}/text_index")
     monitor_units = mon.visible_units(spark, f"{root}/monitor")
-    asg_epochs = sd._complete_epochs(spark, f"{root}/dedup_index/{sd.ASSIGNMENT_DIR}")
+    asg_epochs = committed_dirs(spark, f"{root}/dedup_index/{sd.ASSIGNMENT_DIR}")
     dedup_epoch = asg_epochs[-1][0] if asg_epochs else -1
     ann_snap = ai.snapshot_files(spark, f"{root}/ann_index")
     pq_snap = pqi.snapshot_files(spark, f"{root}/pq_index")
@@ -189,7 +175,7 @@ def record_epoch(
             "after its wave completes)"
         )
 
-    prior = _epoch_dirs(spark, platform_root)
+    prior = committed_dirs(spark, f"{root}/{EPOCHS_DIR}")
     n = (prior[-1][0] + 1) if prior else 0
     rec = {"epoch": n, **frontiers}
     dedup_epoch = rec["dedup_epoch"]
@@ -446,7 +432,7 @@ def pin(
 ) -> PlatformEpoch:
     """Pin an epoch (default: the latest committed). Raises when none
     exist or the requested one is outside the retention window."""
-    dirs = _epoch_dirs(spark, platform_root)
+    dirs = committed_dirs(spark, f"{platform_root.rstrip('/')}/{EPOCHS_DIR}")
     if not dirs:
         raise FileNotFoundError(
             f"no committed epochs under {platform_root}/{EPOCHS_DIR}; "

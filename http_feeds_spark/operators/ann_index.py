@@ -76,7 +76,6 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
     removed = erasure.purge_partitioned_store(
         spark, corpus_path, erased, id_col, "cluster", dedup_keys=[id_col]
     )
-    invalidate_corpus_cache(index_root)  # partitions were rewritten/deleted
     erasure.clear_ledger_batches(spark, index_root, nos)
     return removed
 
@@ -89,9 +88,7 @@ def compact_store(spark: SparkSession, index_root: str) -> tuple[int, int]:
     from http_feeds_spark.stores import rewrite_partitioned_store
 
     _, corpus_path = _paths(index_root)
-    out = rewrite_partitioned_store(spark, corpus_path, "cluster")
-    invalidate_corpus_cache(index_root)  # the file set was rewritten
-    return out
+    return rewrite_partitioned_store(spark, corpus_path, "cluster")
 
 
 def _paths(index_root: str) -> tuple[str, str]:
@@ -130,9 +127,9 @@ def build_index(
     honored verbatim: the feed-bootstrap path (ingest.run_ann_index)
     deliberately passes one, because sizing from the FIRST BATCH of a
     growing feed would freeze a too-small quantizer."""
-    invalidate_centroid_cache(index_root)  # the store is being rewritten
-    invalidate_corpus_cache(index_root)
     cent_path, corpus_path = _paths(index_root)
+    stores.forget(cent_path)  # the stores are being rewritten
+    stores.forget(corpus_path)
     if k is None:
         from http_feeds_spark.functions.vectuner import suggest_params
 
@@ -154,34 +151,8 @@ def build_index(
         .write.mode("overwrite")
         .parquet(cent_path)
     )
-    invalidate_centroid_cache(index_root)  # readers must reload the model
-    invalidate_corpus_cache(index_root)
-
-
-# --- model metadata cache (r16, the pq_index._MODEL_CACHE pattern) ----------
-# The centroid store is a single-write artifact: only build_index rewrites
-# it (upserts/updates keep the quantizer frozen by contract). Memoizing the
-# k-row model per root removes the one scheduled collect every search paid
-# to re-load an unchanged model. Metadata only — corpus scans, the erasure
-# filter and the search aggregates still execute per call. Entries carry
-# the centroid dir's modification stamp and a hit re-validates it (one
-# driver-side stat, no Spark job) so even an out-of-band rebuild by
-# another process reads as a miss.
-_CENTROID_CACHE: dict[str, tuple[int, list]] = {}
-
-
-def invalidate_centroid_cache(index_root: str) -> None:
-    """Drop the cached model for ``index_root`` — build_index calls this
-    around the rebuild (the only path that rewrites the centroid store)."""
-    _CENTROID_CACHE.pop(index_root.rstrip("/"), None)
-
-
-def invalidate_corpus_cache(index_root: str) -> None:
-    """Drop the cached corpus scan for ``index_root`` — called by every
-    path that writes, rewrites or deletes files under corpus/. (The
-    handle itself lives in stores._SCAN_HANDLES so the shared
-    rewrite/purge protocols invalidate it too.)"""
-    stores.invalidate_scan(_paths(index_root)[1])
+    stores.forget(cent_path)  # readers must reload the model
+    stores.forget(corpus_path)
 
 
 def _corpus_df(spark: SparkSession, index_root: str) -> DataFrame:
@@ -189,14 +160,9 @@ def _corpus_df(spark: SparkSession, index_root: str) -> DataFrame:
 
 
 def ensure_index(spark: SparkSession, emb: DataFrame, index_root: str, **kw) -> bool:
-    """Build the index iff absent; returns True when a build ran. A
-    stamp-validated cached model (r16) answers the presence probe with
-    one driver-side stat — the cache is populated only from committed
-    stores."""
+    """Build the index iff absent; returns True when a build ran. The
+    presence probe is a driver-side walk (stores.parquet_exists)."""
     cent_path, _ = _paths(index_root)
-    hit = _CENTROID_CACHE.get(index_root.rstrip("/"))
-    if hit is not None and hit[0] == stores.modification_stamp(spark, cent_path):
-        return False
     if parquet_exists(spark, cent_path):
         return False
     build_index(spark, emb, index_root, **kw)
@@ -271,7 +237,7 @@ def upsert_vectors(
     n = assigned.count()
     if n:
         assigned.write.mode("append").partitionBy("cluster").parquet(corpus_path)
-        invalidate_corpus_cache(index_root)  # new files are visible
+        stores.forget(corpus_path)  # new files are visible
     return n
 
 
@@ -335,16 +301,18 @@ def load_centroids(
             spark, cent_path, files, "ANN centroid"
         ).collect()
         return sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
-    key = index_root.rstrip("/")
-    stamp = stores.modification_stamp(spark, cent_path)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]  # callers never mutate the model (module contract)
-    if stamp < 0 or not parquet_exists(spark, cent_path):
+
+    def load():
+        if not parquet_exists(spark, cent_path):
+            return None
+        rows = spark.read.parquet(cent_path).collect()
+        return sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
+
+    # the centroid store is single-write (only build_index rewrites it),
+    # so the model is memoized; callers never mutate it (module contract)
+    cents = stores.memo(spark, cent_path, (cent_path,), load)
+    if cents is None:
         raise FileNotFoundError(f"no ANN index at {index_root}; build_index first")
-    rows = spark.read.parquet(cent_path).collect()
-    cents = sorted((int(r.cid), [float(x) for x in r.cvec]) for r in rows)
-    _CENTROID_CACHE[key] = (stamp, cents)
     return cents
 
 

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from http_feeds_spark import stores
-from http_feeds_spark.stores import committed, hadoop_fs
+from http_feeds_spark.stores import hadoop_fs
 
 ERASED_DIR = "erased"
 
@@ -61,38 +61,10 @@ def _ledger_root(index_root: str) -> str:
     return f"{index_root.rstrip('/')}/{ERASED_DIR}"
 
 
-def _invalidate_reader_caches(index_root: str) -> None:
-    """Every ledger mutation changes what readers must filter — drop the
-    committed-frontier metadata cache for this root (text_index.py; a
-    no-op for roots that never populated it). Lazy import: text_index
-    imports this module at top level."""
-    from http_feeds_spark.operators import text_index as _ti
-
-    _ti.invalidate_frontier(index_root)
-
-
-def _ledger_batches(spark: SparkSession, index_root: str) -> list[tuple[int, str]]:
-    """(number, path) of every _SUCCESS-committed erase batch, ascending
-    (the text_index.py batch-visibility rule)."""
-    fs, root = hadoop_fs(spark, _ledger_root(index_root))
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch=") and name[6:].isdigit():
-            if committed(spark, st.getPath().toString()):
-                out.append((int(name[6:]), st.getPath().toString()))
-    return sorted(out)
-
-
 def erased_ids(spark: SparkSession, index_root: str) -> DataFrame | None:
     """Distinct erased ids (one ``id`` long column), or None when the
     ledger is absent/empty — callers treat None as "no filtering"."""
-    batches = _ledger_batches(spark, index_root)
-    if not batches:
-        return None
-    return spark.read.parquet(*[p for _, p in batches]).select("id").distinct()
+    return ledger_snapshot(spark, index_root)[1]
 
 
 def ledger_snapshot(
@@ -100,11 +72,13 @@ def ledger_snapshot(
 ) -> tuple[list[int], DataFrame | None]:
     """(committed ledger batch numbers, their distinct ids) — the
     snapshot a purge takes up front so it clears exactly what it
-    processed (clear_ledger_batches) and nothing committed later."""
-    batches = _ledger_batches(spark, index_root)
+    processed (clear_ledger_batches) and nothing committed later. The
+    schema is named (``erase_ids`` writes only ``id long``), so building
+    the frame runs no schema-inference job."""
+    batches = stores.committed_dirs(spark, _ledger_root(index_root), "batch=")
     if not batches:
         return [], None
-    ids = spark.read.parquet(*[p for _, p in batches]).select("id").distinct()
+    ids = spark.read.schema("id long").parquet(*[p for _, p in batches]).distinct()
     return [n for n, _ in batches], ids
 
 
@@ -117,18 +91,17 @@ def erase_ids(
     invisible (no _SUCCESS) and reclaimed by the retry, which targets
     max(committed)+1 — the same number the torn attempt used."""
     fresh = ids.select(F.col(id_col).cast("long").alias("id")).distinct()
-    prior = erased_ids(spark, index_root)
+    nos, prior = ledger_snapshot(spark, index_root)
     if prior is not None:
         fresh = fresh.join(prior, "id", "left_anti")
     fresh = fresh.localCheckpoint()  # count + write must see one snapshot
     n = fresh.count()
     if n:
-        batches = _ledger_batches(spark, index_root)
-        nxt = (batches[-1][0] + 1) if batches else 0
+        nxt = (nos[-1] + 1) if nos else 0
         fresh.coalesce(1).write.mode("overwrite").parquet(
             f"{_ledger_root(index_root)}/batch={nxt:06d}"
         )
-        _invalidate_reader_caches(index_root)
+        stores.forget(index_root)  # readers must filter the new batch
     return n
 
 
@@ -151,7 +124,7 @@ def clear_ledger(spark: SparkSession, index_root: str) -> None:
     fs, root = hadoop_fs(spark, _ledger_root(index_root))
     if fs.exists(root):
         fs.delete(root, True)
-        _invalidate_reader_caches(index_root)
+        stores.forget(index_root)
 
 
 def clear_ledger_batches(
@@ -168,7 +141,7 @@ def clear_ledger_batches(
         if fs.exists(p):
             fs.delete(p, True)
     if batch_nos:
-        _invalidate_reader_caches(index_root)
+        stores.forget(index_root)
 
 
 def purge_partitioned_store(
@@ -187,8 +160,8 @@ def purge_partitioned_store(
 
     Protocol (stage → swap), with every crash window recoverable:
 
-    1. **Resume** any torn swap first. A committed staged partition dir
-       whose live dir is MISSING holds the only copy of that
+    1. **Resume** any torn swap first (``stores.resume_stage_swap``).
+       A committed staged partition dir whose live dir is MISSING holds the only copy of that
        partition's survivors — rename it into place. A committed staged
        dir whose live dir EXISTS is merged, never discarded: the live
        dir may be the pre-swap original (crash before the delete) or a
@@ -216,31 +189,12 @@ def purge_partitioned_store(
 
     Returns the number of rows physically removed."""
     stage_root = store_path.rstrip("/") + "__purge_stage"
+    merged_parts = [
+        name[len(part_col) + 1 :]
+        for name in stores.resume_stage_swap(spark, store_path, "__purge_stage")
+    ]
+    stores.forget(store_path)  # the resume may have moved partitions in
     fs, jstage = hadoop_fs(spark, stage_root)
-    merged_parts: list[str] = []
-    if fs.exists(jstage):
-        if committed(spark, stage_root):
-            for st in fs.listStatus(jstage):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith(f"{part_col}="):
-                    _, live = hadoop_fs(spark, f"{store_path}/{name}")
-                    if not fs.exists(live):
-                        fs.rename(st.getPath(), live)
-                    else:
-                        for fst in fs.listStatus(st.getPath()):
-                            fname = fst.getPath().getName()
-                            if fname.startswith(("_", ".")):
-                                continue
-                            _, tgt = hadoop_fs(
-                                spark, f"{store_path}/{name}/restored-{fname}"
-                            )
-                            fs.rename(fst.getPath(), tgt)
-                        merged_parts.append(name[len(part_col) + 1 :])
-        fs.delete(jstage, True)
-        # the resume renamed/merged partition dirs — any cached scan
-        # handle for this store predates that file set (r16)
-        stores.invalidate_scan(store_path)
-
     df = spark.read.parquet(store_path)
     key = erased.withColumnRenamed("id", id_col)
     affected = [
@@ -279,7 +233,7 @@ def purge_partitioned_store(
         if fs.exists(staged):
             fs.rename(staged, live)
     fs.delete(jstage, True)
-    stores.invalidate_scan(store_path)  # partitions were rewritten/deleted
+    stores.forget(store_path)  # partitions were rewritten/deleted
     return removed
 
 

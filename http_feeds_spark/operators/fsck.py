@@ -20,7 +20,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from http_feeds_spark.operators import erasure
-from http_feeds_spark.stores import hadoop_fs, parquet_exists
+from http_feeds_spark.stores import (
+    committed,
+    committed_dirs,
+    hadoop_fs,
+    numbered_dirs,
+    parquet_exists,
+)
 
 
 def _ledger_count(spark: SparkSession, index_root: str) -> int:
@@ -53,7 +59,7 @@ def fsck_text_index(spark: SparkSession, index_root: str) -> dict:
     from http_feeds_spark.operators import text_index as ti
 
     post_path, _, meta_path = ti._paths(index_root)
-    raw = ti._committed_batch_dirs(spark, post_path)
+    raw = committed_dirs(spark, post_path, "batch=")
     visible = ti._complete_batches(spark, post_path)
     manifests = ti._manifests(spark, index_root)
     raw_nos = {no for no, _ in raw}
@@ -112,20 +118,13 @@ def fsck_monitor(spark: SparkSession, monitor_root: str) -> dict:
     - ``sketch_coverage``: visible units carrying the HLL sketch family
       over total visible units (distinct-count queries need full
       coverage)."""
-    from http_feeds_spark.stores import committed
     from http_feeds_spark.streaming import monitor as mon
 
     root = monitor_root.rstrip("/")
     exposed, man = mon._view(spark, root)
-    raw = mon._raw_ids(spark, root)
-    fs, _ = hadoop_fs(spark, root)
-    gens = []
-    _, jmerged = hadoop_fs(spark, f"{root}/{mon.MERGED_DIR}")
-    if fs.exists(jmerged):
-        for st in fs.listStatus(jmerged):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.isdigit():
-                gens.append(int(name))
+    raw = [b for b, _ in committed_dirs(spark, f"{root}/{mon.STATS_DIR}", "batch=")]
+    # merged/<gen> dirs carry no marker of their own: list them all
+    gens = [g for g, _ in numbered_dirs(spark, f"{root}/{mon.MERGED_DIR}")]
     active_gen = man[0] if man is not None else None
     torn = [
         g
@@ -491,17 +490,16 @@ def fsck_epochs(spark: SparkSession, platform_root: str) -> dict:
     rewrote stores outside the platform wave (manual compaction,
     erasure purge) and a fresh record_epoch is due."""
     from http_feeds_spark import epochs as ep
-    from http_feeds_spark.stores import committed
     from http_feeds_spark.streaming import dedup as sd
     from http_feeds_spark.streaming import monitor as mon
 
     root = platform_root.rstrip("/")
-    dirs = ep._epoch_dirs(spark, platform_root)
+    dirs = committed_dirs(spark, f"{root}/{ep.EPOCHS_DIR}")
     out: dict = {"epochs": [n for n, _ in dirs], "reports": []}
     if not dirs:
         return out
     asg_have = {
-        n for n, _ in sd._complete_epochs(spark, f"{root}/dedup_index/{sd.ASSIGNMENT_DIR}")
+        n for n, _ in committed_dirs(spark, f"{root}/dedup_index/{sd.ASSIGNMENT_DIR}")
     }
     fs, _ = hadoop_fs(spark, root)
 

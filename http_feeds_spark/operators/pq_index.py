@@ -53,45 +53,6 @@ CODES_DIR = "codes"
 CODEBOOKS_DIR = "codebooks"
 CENTROIDS_DIR = "centroids"
 
-# --- model metadata cache (r16) ----------------------------------------------
-# Every search call paid one scheduled collect to re-load the SAME frozen
-# model (centroids + codebooks): both model stores are single-write
-# artifacts that change ONLY on build_pq_index — upserts, compaction and
-# erasure never touch them (the frozen-quantizer contract). Memoize the
-# model per index root, invalidated by the one writer. Metadata caching
-# only (the model is nlist + m·ksub rows); code scans, the erase-ledger
-# filter and every search aggregate still execute per call. Callers must
-# not mutate the returned lists (module-internal consumers never do).
-# Entries carry the centroid dir's modification stamp and a hit
-# re-validates it (one driver-side stat, no Spark job) so even an
-# out-of-band rebuild by another process reads as a miss.
-_MODEL_CACHE: dict[str, tuple] = {}
-
-
-def invalidate_model_cache(index_root: str) -> None:
-    """Drop the cached model for ``index_root`` — build_pq_index calls
-    this around the rebuild (the only path that rewrites model stores)."""
-    _MODEL_CACHE.pop(index_root.rstrip("/"), None)
-
-
-# The code-store SCAN HANDLE is memoized too: spark.read.parquet schedules
-# one file-listing/footer job per call even though the returned frame is
-# lazy — per-search fixed cost for a listing that changes only when a
-# writer commits. Metadata only (a plan handle, never rows). The handle
-# lives in stores._SCAN_HANDLES so EVERY writer invalidates it: the code
-# paths below (build/upsert/update/purge/compact) explicitly, and the
-# shared stage→swap protocols (stores.rewrite_partitioned_store,
-# erasure.purge_partitioned_store) at the file-set swap itself — a
-# maintenance rewrite or crash-window resume can never leave this module
-# holding a dead plan.
-
-
-def invalidate_codes_cache(index_root: str) -> None:
-    """Drop the cached code-store scan for ``index_root`` — called by
-    every path that writes, rewrites or deletes files under codes/."""
-    stores.invalidate_scan(_paths(index_root)[0])
-
-
 def _codes_df(spark: SparkSession, index_root: str) -> DataFrame:
     return stores.cached_scan(spark, _paths(index_root)[0])
 
@@ -105,9 +66,7 @@ def compact_store(spark: SparkSession, index_root: str) -> tuple[int, int]:
     from http_feeds_spark.stores import rewrite_partitioned_store
 
     codes_path, _, _ = _paths(index_root)
-    out = rewrite_partitioned_store(spark, codes_path, "cluster")
-    invalidate_codes_cache(index_root)  # the file set was rewritten
-    return out
+    return rewrite_partitioned_store(spark, codes_path, "cluster")
 
 
 def _dpp_enabled(spark: SparkSession) -> bool:
@@ -205,9 +164,9 @@ def build_pq_index(
     the (model-sized) table work, identical code-scan bytes."""
     from http_feeds_spark.functions import vectuner as vt
 
-    invalidate_model_cache(index_root)  # the stores are being rewritten
-    invalidate_codes_cache(index_root)
     codes_path, books_path, cent_path = _paths(index_root)
+    stores.forget(cent_path)  # the stores are being rewritten
+    stores.forget(codes_path)
     if nlist is None or m is None or ksub is None or validate:
         n_vectors = emb.count()
         first = emb.select(vec_col).first()
@@ -263,19 +222,14 @@ def build_pq_index(
         ],
         "cid int, cvec array<double>, residual boolean",
     ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-    invalidate_model_cache(index_root)  # readers must reload the new model
-    invalidate_codes_cache(index_root)
+    stores.forget(cent_path)  # readers must reload the new model
+    stores.forget(codes_path)
 
 
 def ensure_pq_index(spark: SparkSession, emb: DataFrame, index_root: str, **kw) -> bool:
-    """Build iff absent (presence = centroids/, the last-written store).
-    A stamp-validated cached model (r16) answers the presence probe with
-    one driver-side stat — the cache is populated only from committed
-    stores."""
+    """Build iff absent (presence = centroids/, the last-written store,
+    probed by a driver-side walk: stores.parquet_exists)."""
     _, _, cent_path = _paths(index_root)
-    hit = _MODEL_CACHE.get(index_root.rstrip("/"))
-    if hit is not None and hit[0] == stores.modification_stamp(spark, cent_path):
-        return False
     if parquet_exists(spark, cent_path):
         return False
     build_pq_index(spark, emb, index_root, **kw)
@@ -325,38 +279,41 @@ def load_model(
         for r in rows:
             books[r.sub].append((int(r.cid), [float(x) for x in r.cvec]))
         return cents, [sorted(b) for b in books], residual
-    key = index_root.rstrip("/")
-    stamp = stores.modification_stamp(spark, cent_path)
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]  # callers never mutate the model (module contract)
-    if stamp < 0 or not parquet_exists(spark, cent_path):
+
+    def load():
+        if not parquet_exists(spark, cent_path):
+            return None
+        # ONE collect for both model stores (r15, guide §1: each tiny
+        # driver job costs fixed scheduling latency ×3 bench runs; the
+        # union tags centroids sub=-1 — schemas differ only in the
+        # residual flag, probed footer-only via .columns)
+        cent_df = spark.read.parquet(cent_path)
+        if "residual" not in cent_df.columns:  # pre-residual store layout
+            cent_df = cent_df.withColumn("residual", F.lit(None).cast("boolean"))
+        books_df = spark.read.parquet(books_path).withColumn(
+            "residual", F.lit(None).cast("boolean")
+        )
+        rows = (
+            cent_df.select(F.lit(-1).alias("sub"), "cid", "cvec", "residual")
+            .unionByName(books_df.select("sub", "cid", "cvec", "residual"))
+            .collect()
+        )
+        crows = [r for r in rows if r.sub == -1]
+        brows = [r for r in rows if r.sub >= 0]
+        cents = sorted((int(r.cid), [float(x) for x in r.cvec]) for r in crows)
+        residual = bool(crows[0].residual) if crows and crows[0].residual is not None else False
+        n_sub = 1 + max(r.sub for r in brows)
+        books: pq.Codebooks = [[] for _ in range(n_sub)]
+        for r in brows:
+            books[r.sub].append((int(r.cid), [float(x) for x in r.cvec]))
+        return cents, [sorted(b) for b in books], residual
+
+    # both model stores are single-write (only build_pq_index rewrites
+    # them, centroids last), so the model is memoized on the centroid
+    # stamp; callers never mutate it (module contract)
+    model = stores.memo(spark, cent_path, (cent_path,), load)
+    if model is None:
         raise FileNotFoundError(f"no PQ index at {index_root}; build_pq_index first")
-    # ONE collect for both model stores (r15, guide §1: each tiny
-    # driver job costs fixed scheduling latency ×3 bench runs; the union
-    # tags centroids sub=-1 — schemas differ only in the residual flag,
-    # probed footer-only via .columns)
-    cent_df = spark.read.parquet(cent_path)
-    if "residual" not in cent_df.columns:  # pre-residual store layout
-        cent_df = cent_df.withColumn("residual", F.lit(None).cast("boolean"))
-    books_df = spark.read.parquet(books_path).withColumn(
-        "residual", F.lit(None).cast("boolean")
-    )
-    rows = (
-        cent_df.select(F.lit(-1).alias("sub"), "cid", "cvec", "residual")
-        .unionByName(books_df.select("sub", "cid", "cvec", "residual"))
-        .collect()
-    )
-    crows = [r for r in rows if r.sub == -1]
-    brows = [r for r in rows if r.sub >= 0]
-    cents = sorted((int(r.cid), [float(x) for x in r.cvec]) for r in crows)
-    residual = bool(crows[0].residual) if crows and crows[0].residual is not None else False
-    n_sub = 1 + max(r.sub for r in brows)
-    books: pq.Codebooks = [[] for _ in range(n_sub)]
-    for r in brows:
-        books[r.sub].append((int(r.cid), [float(x) for x in r.cvec]))
-    model = (cents, [sorted(b) for b in books], residual)
-    _MODEL_CACHE[key] = (stamp, model)
     return model
 
 
@@ -499,7 +456,7 @@ def upsert_vectors(
     n = assigned.count()
     if n:
         assigned.write.mode("append").partitionBy("cluster").parquet(codes_path)
-        invalidate_codes_cache(index_root)  # new files are visible
+        stores.forget(codes_path)  # new files are visible
     return n
 
 
@@ -521,7 +478,6 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
     removed = erasure.purge_partitioned_store(
         spark, codes_path, erased, id_col, "cluster", dedup_keys=[id_col]
     )
-    invalidate_codes_cache(index_root)  # partitions were rewritten/deleted
     erasure.clear_ledger_batches(spark, index_root, nos)
     return removed
 

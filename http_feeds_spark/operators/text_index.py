@@ -53,7 +53,10 @@ from http_feeds_spark.operators import erasure
 from http_feeds_spark.operators.retrieval import B, K1
 from http_feeds_spark.stores import (
     committed,
+    committed_dirs,
+    forget,
     hadoop_fs,
+    memo,
     parquet_exists,
     require_lossless_cast,
 )
@@ -65,26 +68,6 @@ COMPACTION_DIR = "compaction"
 N_BUCKETS = 64
 
 
-def _committed_batch_dirs(spark: SparkSession, post_root: str) -> list[tuple[int, str]]:
-    """(number, path) of every _SUCCESS-committed batch dir, ascending
-    (the streaming/dedup.py epoch-visibility rule) — RAW listing, before
-    compaction manifests hide merged sources."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(post_root)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jvm_path):
-        return []
-    out = []
-    for st in fs.listStatus(jvm_path):
-        name = st.getPath().getName()
-        # batch dirs use key=value form (batch=NNNNNN) so Spark's
-        # partition discovery reads them as a clean `batch` column
-        if st.isDirectory() and name.startswith("batch=") and name[6:].isdigit():
-            marker = spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out.append((int(name[6:]), st.getPath().toString()))
-    return sorted(out)
-
-
 def _index_root_of(post_root: str) -> str:
     # _paths always derives post_root as <index_root>/postings
     return post_root.rstrip("/").rsplit("/", 1)[0]
@@ -94,30 +77,17 @@ def _manifests(spark: SparkSession, index_root: str) -> list[tuple[int, int, lis
     """(gen, new_batch, sources) of every _SUCCESS-committed compaction
     manifest, ascending by generation. A torn manifest has no marker and
     never activates."""
-    root = f"{index_root.rstrip('/')}/{COMPACTION_DIR}"
-    fs, jroot = hadoop_fs(spark, root)
-    if not fs.exists(jroot):
-        return []
-    gens = []
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.isdigit()
-            and committed(spark, st.getPath().toString())
-        ):
-            gens.append(int(name))
+    gens = committed_dirs(spark, f"{index_root.rstrip('/')}/{COMPACTION_DIR}")
     if not gens:
         return []
-    # ONE tiny collect over every committed manifest dir (r16, guide §1
-    # job audit): the previous per-generation collect scheduled one job
-    # per manifest, making every frontier listing O(generations)
-    # scheduled jobs on a long-lived store. The generation comes back
-    # from each file's parent directory (not a path match, which the
-    # index root's own path could also satisfy), so one read answers
-    # all of them.
+    # ONE tiny collect over every committed manifest dir, schema named
+    # (_replace_batches writes only this one), so the collect is the
+    # only job. The generation comes back from each file's parent
+    # directory (not a path match, which the index root's own path could
+    # also satisfy), so one read answers all of them.
     rows = (
-        spark.read.parquet(*[f"{root}/{g:06d}" for g in sorted(gens)])
+        spark.read.schema("new_batch int, sources array<int>")
+        .parquet(*[p for _, p in gens])
         .select(
             F.element_at(F.split(F.input_file_name(), "/"), -2)
             .cast("int")
@@ -130,7 +100,7 @@ def _manifests(spark: SparkSession, index_root: str) -> list[tuple[int, int, lis
     by_gen = {int(r.gen): r for r in rows}
     return [
         (g, int(by_gen[g].new_batch), [int(b) for b in by_gen[g].sources])
-        for g in sorted(gens)
+        for g, _ in gens
     ]
 
 
@@ -140,7 +110,7 @@ def _complete_batches(spark: SparkSession, post_root: str) -> list[tuple[int, st
     merged ``batch=<new>`` dir commits — that single _SUCCESS atomically
     swaps the sources for their merge, so no read ever double-counts a
     posting (manifest-first protocol, see compact_postings)."""
-    raw = _committed_batch_dirs(spark, post_root)
+    raw = committed_dirs(spark, post_root, "batch=")
     nos = {no for no, _ in raw}
     hidden: set[int] = set()
     for _, new_batch, sources in _manifests(spark, _index_root_of(post_root)):
@@ -157,95 +127,56 @@ def _visible_postings(spark: SparkSession, post_root: str) -> tuple[DataFrame | 
     return spark.read.option("basePath", post_root).parquet(*paths), len(paths)
 
 
-# --- committed-frontier metadata cache (r16) ---------------------------------
-#
-# Every search/ensure call previously re-derived the same COMMITTED STORE
-# METADATA per call: a meta/ read + collect (one scheduled driver job), a
-# postings/ directory listing, a collect over the compaction manifests and
-# an erase-ledger probe — fixed costs that change only when a write commits.
-# The cache memoizes exactly that metadata per index root and is INVALIDATED
-# BY EVERY WRITE PATH in this module (build/upsert/replace/purge/vacuum) and
-# by the erasure-ledger mutators (operators/erasure.py), so a warm read
-# serves the same committed frontier a cold read would, and the first read
-# after any commit re-derives everything. This is METADATA caching, never
-# result caching: no query output, no posting row and no aggregate over data
-# is ever stored — every search still executes from the parquet inputs.
-# Out-of-band writers (another process, a crash-recovery hand-edit, a
-# legacy-layout store swapped in) are caught by the FRONTIER STAMP: every
-# writer in this module lands its commit by rewriting meta/ LAST, and the
-# ledger mutators create/delete batch dirs under erased/, so a hit
-# re-validates the (meta, erased) directory modification stamps — two
-# driver-side stats, never a Spark job — before serving;
-# ``invalidate_frontier`` remains the explicit hook.
-
-_FRONTIER_CACHE: dict[str, dict] = {}
-
-
-def invalidate_frontier(index_root: str) -> None:
-    """Drop the cached read frontier for ``index_root`` — called by every
-    write path whose commit changes what readers see."""
-    _FRONTIER_CACHE.pop(index_root.rstrip("/"), None)
-
-
 def _frontier(spark: SparkSession, index_root: str) -> dict | None:
-    """The committed read-state of the index, cached: meta-row fields,
-    visible batch dirs, the visible-postings frame, the layout probes and
-    the erase-ledger filter. ``None`` when no usable meta store exists
-    (a zero-row committed meta is a torn artifact and reads as absent —
-    r16 ADVICE); absence is never cached, a build may land any moment."""
-    from http_feeds_spark.stores import modification_stamp
-
-    key = index_root.rstrip("/")
+    """The committed read-state of the index, memoized (stores.memo,
+    keyed by the index root): meta-row fields, visible batch dirs, the
+    visible-postings frame, the layout probes and the erase-ledger
+    filter. Every writer in this module lands its commit by rewriting
+    meta/ LAST, and the ledger mutators create/delete batch dirs under
+    erased/, so those two dirs are the stamps. ``None`` when no usable
+    meta store exists (a zero-row committed meta is a torn artifact and
+    reads as absent)."""
     post_path, terms_path, meta_path = _paths(index_root)
-    stamp = (
-        modification_stamp(spark, meta_path),
-        modification_stamp(spark, erasure._ledger_root(index_root)),
-    )
-    hit = _FRONTIER_CACHE.get(key)
-    if hit is not None and hit["session"] is spark and hit["stamp"] == stamp:
-        # session-checked (a restarted session never gets a dead plan) and
-        # stamp-checked (an out-of-band meta/ledger commit reads as a miss)
-        return hit
-    if stamp[0] < 0 or not parquet_exists(spark, meta_path):
-        return None
-    meta_rows = spark.read.parquet(meta_path).collect()
-    if not meta_rows:
-        return None
-    m = meta_rows[0]
-    batches = _complete_batches(spark, post_path)
-    post_df = (
-        spark.read.option("basePath", post_path).parquet(*[p for _, p in batches])
-        if batches
-        else None
-    )
-    fr = {
-        "n_docs": int(m.n_docs),
-        "avgdl": float(m.avgdl),
-        "n_batches_meta": int(
-            getattr(m, "n_batches", len(batches)) or len(batches)
-        ),
-        "analyzer": getattr(m, "analyzer", None) or "whitespace",
-        # a pre-analyzer meta (no such column) answers queries as
-        # "whitespace" but reads as a stale LAYOUT to ensure_text_index
-        "has_analyzer_col": "analyzer" in m.__fields__,
-        "batches": batches,
-        "post_df": post_df,
-        # ensure's layout probe reads the OLDEST batch's schema (footer
-        # only), exactly as the uncached form did
-        "first_batch_positional": bool(
-            batches and "positions" in spark.read.parquet(batches[0][1]).columns
-        ),
-        "erased": erasure.erased_ids(spark, index_root),
-        "terms_df": (
-            spark.read.parquet(terms_path)
-            if parquet_exists(spark, terms_path)
+
+    def load() -> dict | None:
+        if not parquet_exists(spark, meta_path):
+            return None
+        meta_rows = spark.read.parquet(meta_path).collect()
+        if not meta_rows:
+            return None
+        m = meta_rows[0]
+        batches = _complete_batches(spark, post_path)
+        post_df = (
+            spark.read.option("basePath", post_path).parquet(*[p for _, p in batches])
+            if batches
             else None
-        ),
-        "session": spark,
-        "stamp": stamp,
-    }
-    _FRONTIER_CACHE[key] = fr
-    return fr
+        )
+        return {
+            "n_docs": int(m.n_docs),
+            "avgdl": float(m.avgdl),
+            "n_batches_meta": int(
+                getattr(m, "n_batches", len(batches)) or len(batches)
+            ),
+            "analyzer": getattr(m, "analyzer", None) or "whitespace",
+            # a pre-analyzer meta (no such column) answers queries as
+            # "whitespace" but reads as a stale LAYOUT to ensure_text_index
+            "has_analyzer_col": "analyzer" in m.__fields__,
+            "batches": batches,
+            "post_df": post_df,
+            # ensure's layout probe reads the OLDEST batch's schema (footer
+            # only), exactly as the uncached form did
+            "first_batch_positional": bool(
+                batches and "positions" in spark.read.parquet(batches[0][1]).columns
+            ),
+            "erased": erasure.erased_ids(spark, index_root),
+            "terms_df": (
+                spark.read.parquet(terms_path)
+                if parquet_exists(spark, terms_path)
+                else None
+            ),
+        }
+
+    return memo(spark, index_root, (meta_path, erasure._ledger_root(index_root)), load)
 
 
 def visible_batches(spark: SparkSession, index_root: str) -> list[int]:
@@ -264,7 +195,7 @@ def _next_batch_no(spark: SparkSession, post_root: str) -> int:
     it for an upsert would activate that stale manifest and hide live
     batches. A torn (uncommitted) attempt at this number is reclaimed by
     the retry's overwrite, same as before."""
-    taken = {no for no, _ in _committed_batch_dirs(spark, post_root)}
+    taken = {no for no, _ in committed_dirs(spark, post_root, "batch=")}
     for _, new_batch, sources in _manifests(spark, _index_root_of(post_root)):
         taken.add(new_batch)
         taken.update(sources)
@@ -381,7 +312,7 @@ def build_text_index(
     multi-batch store must not leave stale dirs visible next to the new
     batch 0), then the fresh stores land with meta/ last."""
     tx._require_analyzer(analyzer)
-    invalidate_frontier(index_root)  # the store stops being readable NOW
+    forget(index_root)  # the store stops being readable NOW
     post_path, _, meta_path = _paths(index_root)
     fs, jmeta = hadoop_fs(spark, meta_path)
     if fs.exists(jmeta):
@@ -392,7 +323,7 @@ def build_text_index(
             fs.delete(jp, True)
     _write_postings_batch(spark, docs, post_path, 0, id_col, text_col, analyzer)
     _write_derived(spark, index_root, 1, analyzer)
-    invalidate_frontier(index_root)  # readers must see the fresh build
+    forget(index_root)  # readers must see the fresh build
 
 
 def _exploded_postings(
@@ -505,7 +436,7 @@ def upsert_documents(
             id_col, text_col, analyzer,
         )
         _write_derived(spark, index_root, n_batches + 1, analyzer)
-        invalidate_frontier(index_root)  # a new batch is visible
+        forget(index_root)  # a new batch is visible
     return n
 
 
@@ -1058,10 +989,10 @@ def _replace_batches(
         .partitionBy("bucket")
         .parquet(f"{post_path}/batch={new_no:06d}")
     )  # commit point: this _SUCCESS swaps sources -> merge atomically
-    invalidate_frontier(index_root)  # visibility flipped at the commit
+    forget(index_root)  # visibility flipped at the commit
     _write_derived(spark, index_root, len(_complete_batches(spark, post_path)))
     vacuum_postings(spark, index_root)
-    invalidate_frontier(index_root)
+    forget(index_root)
     return new_no
 
 
@@ -1211,7 +1142,7 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
                     "n_docs long, avgdl double, n_batches int, analyzer string",
                 ).coalesce(1).write.mode("overwrite").parquet(meta_path)
     erasure.clear_ledger_batches(spark, index_root, ledger_nos)
-    invalidate_frontier(index_root)  # postings and ledger both changed
+    forget(index_root)  # postings and ledger both changed
     return removed
 
 
@@ -1223,7 +1154,7 @@ def vacuum_postings(spark: SparkSession, index_root: str) -> int:
     sources are live data. Pure cleanup; the view never depends on it.
     Returns the number of directories removed."""
     post_path, _, _ = _paths(index_root)
-    nos = {no for no, _ in _committed_batch_dirs(spark, post_path)}
+    nos = {no for no, _ in committed_dirs(spark, post_path, "batch=")}
     removed = 0
     fs, _ = hadoop_fs(spark, index_root)
     for gen, new_batch, sources in _manifests(spark, index_root):
@@ -1247,5 +1178,5 @@ def vacuum_postings(spark: SparkSession, index_root: str) -> int:
         # the deleted source dirs may back a cached frontier's file list
         # (e.g. a manifest that landed outside this module's writers —
         # the crash-recovery path); readers must re-list
-        invalidate_frontier(index_root)
+        forget(index_root)
     return removed

@@ -1,16 +1,28 @@
-"""Parquet store probing shared by the persistent index modules
-(streaming/dedup.py, operators/ann_index.py).
+"""The committed-store layer every derived store in this package shares.
 
-Index roots at 100 TB are object stores, so presence checks go through
-the Hadoop FileSystem API (any Hadoop-supported filesystem), never the
-local-FS ``os.path`` calls that only work on the driver's disk. They
-are driver-side listings: no Spark job runs to learn whether a store
-exists. A streaming sink directory is the exception: its
-``_spark_metadata`` log, not the listing, decides which files are
-visible, so read a sink through ``or_none``, never ``parquet_exists``.
+A derived store (text postings, monitor units, dedup epochs, erase
+ledgers, platform epochs, the bucketed vector and band stores) is a
+set of directories that become visible only when a writer commits
+them. This module owns that rule once:
+
+- **probing** (``hadoop_fs``, ``committed``, ``parquet_exists``): driver-
+  side listings through the Hadoop FileSystem API, so they work on any
+  Hadoop-supported store and never schedule a Spark job. A streaming
+  sink directory is the exception: its ``_spark_metadata`` log, not the
+  listing, decides which files are visible, so read a sink through
+  ``or_none``, never ``parquet_exists``;
+- **listing** (``committed_dirs`` over ``numbered_dirs``): the numbered
+  ``<prefix><digits>`` batch, manifest and epoch dirs, visible once
+  their committer ``_SUCCESS`` marker exists;
+- **resume** (``resume_stage_swap``): the stage→swap recovery shared by
+  the whole-store rewrites and the erasure purge;
+- **metadata memo** (``memo``, ``forget``, ``cached_scan``): one bounded
+  cache of committed-store metadata.
 """
 
 from __future__ import annotations
+
+from collections import OrderedDict
 
 from pyspark.sql import SparkSession
 
@@ -18,7 +30,7 @@ from pyspark.sql import SparkSession
 def hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) for `path` via the Hadoop FS API — the only
     portable way to list/delete/probe directories on every Spark-
-    supported store (the streaming/dedup.py epoch pattern)."""
+    supported store."""
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()), jvm_path
 
@@ -31,6 +43,37 @@ def committed(spark: SparkSession, path: str) -> bool:
     return bool(
         fs.exists(spark._jvm.org.apache.hadoop.fs.Path(p, "_SUCCESS"))
     )
+
+
+def numbered_dirs(spark: SparkSession, root: str, prefix: str = "") -> list[tuple[int, str]]:
+    """Ascending (n, path) of every child dir of `root` named
+    ``<prefix><digits>``, committed or not: the one walk behind
+    ``committed_dirs``, used directly only by cleanups that must also
+    reach torn dirs. Digits may be padded (``000012``) or not
+    (``batch=12``); they sort numerically. [] when `root` is absent."""
+    fs, jroot = hadoop_fs(spark, root)
+    if not fs.exists(jroot):
+        return []
+    out = []
+    for st in fs.listStatus(jroot):
+        name = st.getPath().getName()
+        digits = name[len(prefix):]
+        if (
+            st.isDirectory()
+            and name.startswith(prefix)
+            and digits.isascii()
+            and digits.isdigit()
+        ):
+            out.append((int(digits), st.getPath().toString()))
+    return sorted(out)
+
+
+def committed_dirs(spark: SparkSession, root: str, prefix: str = "") -> list[tuple[int, str]]:
+    """Ascending (n, path) of the ``<prefix><digits>`` child dirs of
+    `root` that carry ``_SUCCESS``: the visible batches, manifests or
+    epochs of a derived store. A torn write has no marker and is
+    skipped; its retry overwrites it."""
+    return [(n, p) for n, p in numbered_dirs(spark, root, prefix) if committed(spark, p)]
 
 
 def parquet_exists(spark: SparkSession, path: str) -> bool:
@@ -154,39 +197,65 @@ def require_lossless_cast(incoming, store, what: str) -> None:
     )
 
 
-# --- cached parquet scan handles (r16) ---------------------------------------
-# spark.read.parquet schedules one file-listing/footer job per call even
-# though the returned frame is lazy — a fixed per-call cost for a file set
-# that changes only when a writer commits. The handle cache lives HERE, in
-# the same module as the shared stage→swap rewrite protocols, so the
-# low-level store rewriters (rewrite_partitioned_store, and
-# erasure.purge_partitioned_store which builds on the same stage pattern)
-# invalidate it directly — a maintenance pass or crash-window resume that
-# re-materializes a store under new file names can never leave a consumer
-# module holding a dead plan (the module-level write paths invalidate too).
-# METADATA caching only: a plan handle, never rows; a hit is served only
-# to the session that built it.
-_SCAN_HANDLES: dict[str, tuple] = {}
+# --- committed-store metadata memo --------------------------------------------
+# Readers re-derive the same committed metadata on every call: a parquet
+# scan handle (spark.read.parquet schedules a listing/footer job even
+# though the frame is lazy), a frozen ANN/PQ model (one collect), a text
+# index's read frontier (a meta collect, a batch listing, the manifests
+# and the erase ledger). It changes only when a writer commits, so it is
+# memoized here, once, keyed by the path it was read from:
+#
+# - METADATA only: a plan handle, a model-sized list, a frontier dict;
+#   never query output or rows of data. Every search still executes from
+#   the parquet inputs.
+# - A hit is served only to the session that built it (a restarted
+#   session never gets a dead plan), and only while the modification
+#   stamp of each stamp path is unchanged: an out-of-band writer (another
+#   process, a crash-recovery hand edit) reads as a miss. Every writer in
+#   this package also calls ``forget`` at its commit, since a stamp only
+#   moves when a writer replaces or appends under the stamped directory.
+# - Absence (None) is never cached: a build may land any moment.
+# - The stage→swap protocols below live in this module so that a
+#   maintenance rewrite or a crash-window resume forgets the handle at
+#   the file-set swap itself, whichever module called it.
+_MEMO: OrderedDict[str, tuple] = OrderedDict()
+_MEMO_MAX = 64
+
+
+def memo(spark: SparkSession, key: str, stamp_paths, load):
+    """``load()``, memoized under `key` (the path the value is read
+    from) for this session while every path in `stamp_paths` keeps its
+    modification stamp. A None result is returned but not cached. The
+    least recently used entry goes once ``_MEMO_MAX`` are held."""
+    key = key.rstrip("/")
+    stamp = tuple(modification_stamp(spark, p) for p in stamp_paths)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is spark and hit[1] == stamp:
+        _MEMO.move_to_end(key)
+        return hit[2]
+    value = load()
+    if value is None:
+        _MEMO.pop(key, None)
+        return None
+    _MEMO[key] = (spark, stamp, value)
+    _MEMO.move_to_end(key)
+    while len(_MEMO) > _MEMO_MAX:
+        _MEMO.popitem(last=False)
+    return value
+
+
+def forget(key: str) -> None:
+    """Drop the memo entry for `key`: called by every path that writes,
+    rewrites or deletes what that entry was read from."""
+    _MEMO.pop(key.rstrip("/"), None)
 
 
 def cached_scan(spark: SparkSession, store_path: str):
-    """Memoized ``spark.read.parquet(store_path)`` handle — the listing/
+    """Memoized ``spark.read.parquet(store_path)`` handle: the listing/
     footer work runs once per committed layout instead of once per call.
-    Callers must invalidate on every write (see module writers and the
-    rewrite/purge protocols in this package)."""
-    key = store_path.rstrip("/")
-    hit = _SCAN_HANDLES.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet(store_path)
-    _SCAN_HANDLES[key] = (spark, df)
-    return df
-
-
-def invalidate_scan(store_path: str) -> None:
-    """Drop the cached scan handle for ``store_path`` — called by every
-    path that writes, rewrites or deletes files under it."""
-    _SCAN_HANDLES.pop(store_path.rstrip("/"), None)
+    Session-checked only (no stamp), so every writer of the store must
+    ``forget`` it (see module writers and the rewrite/purge protocols)."""
+    return memo(spark, store_path, (), lambda: spark.read.parquet(store_path))
 
 
 def modification_stamp(spark: SparkSession, path: str) -> int:
@@ -221,25 +290,28 @@ def data_file_stats(spark: SparkSession, store_path: str) -> tuple[int, int]:
     return files, dirs
 
 
-def resume_stage_swap(spark: SparkSession, store_path: str, suffix: str) -> bool:
-    """Shared stage→swap resume for the whole-store rewrite protocols
-    (file compaction, legacy migration): a committed stage with live
-    MISSING renames in (it holds the only copy); a committed stage with
-    live PRESENT merges its partition files in alongside — the live dir
-    may be a post-crash recreation by a fold that could not see the
-    store, so discarding the stage would lose every pre-crash row (the
-    purge-resume lesson, applied here) — and returns True so the caller
-    collapses the duplicates the merge can introduce; an uncommitted
-    stage is dropped. The stage root is always gone on return."""
+def resume_stage_swap(spark: SparkSession, store_path: str, suffix: str) -> list[str]:
+    """Shared stage→swap resume for the whole-store rewrites (file
+    compaction, legacy migration) and the erasure purge: a committed
+    stage with live MISSING renames in whole (it holds the only copy); a
+    committed stage with live PRESENT moves each staged partition in —
+    renamed when live lacks it, its files merged in as ``restored-*``
+    alongside when live has it (the live dir may be a post-crash
+    recreation by a fold that could not see the store, so discarding the
+    stage would lose every pre-crash row); an uncommitted stage is
+    dropped. Returns the partition dir names merged into EXISTING live
+    partitions, which the caller rewrites to collapse the duplicates a
+    merge can introduce ([] when none). The stage root is always gone on
+    return."""
     stage = store_path.rstrip("/") + suffix
     fs, jstage = hadoop_fs(spark, stage)
     _, jlive = hadoop_fs(spark, store_path)
-    merged = False
+    merged: list[str] = []
     if fs.exists(jstage):
         if committed(spark, stage):
             if not fs.exists(jlive):
                 fs.rename(jstage, jlive)
-                return False
+                return []
             for st in fs.listStatus(jstage):
                 name = st.getPath().getName()
                 if not st.isDirectory() or "=" not in name:
@@ -247,7 +319,6 @@ def resume_stage_swap(spark: SparkSession, store_path: str, suffix: str) -> bool
                 _, dlive = hadoop_fs(spark, f"{store_path}/{name}")
                 if not fs.exists(dlive):
                     fs.rename(st.getPath(), dlive)
-                    merged = True
                     continue
                 for fst in fs.listStatus(st.getPath()):
                     fname = fst.getPath().getName()
@@ -257,7 +328,7 @@ def resume_stage_swap(spark: SparkSession, store_path: str, suffix: str) -> bool
                         spark, f"{store_path}/{name}/restored-{fname}"
                     )
                     fs.rename(fst.getPath(), tgt)
-                    merged = True
+                merged.append(name)
         fs.delete(jstage, True)
     return merged
 
@@ -308,8 +379,8 @@ def rewrite_partitioned_store(
     merged = resume_stage_swap(spark, store_path, "__rewrite_stage")
     # the resume may have renamed/merged a stage in, and the rewrite
     # below re-materializes under NEW file names either way: any cached
-    # scan handle for this store is dead from here on (r16)
-    invalidate_scan(store_path)
+    # scan handle for this store is dead from here on
+    forget(store_path)
     # one namespace walk serves both the before-count and the dir count
     # (at a 100K-partition store each listing is a full metadata pass)
     before, n_dirs = data_file_stats(spark, store_path)
@@ -342,6 +413,6 @@ def rewrite_partitioned_store(
     )
     fs.delete(jlive, True)
     fs.rename(jstage, jlive)
-    invalidate_scan(store_path)  # the swapped-in file set is the store now
+    forget(store_path)  # the swapped-in file set is the store now
     after, _ = data_file_stats(spark, store_path)
     return before, after

@@ -47,7 +47,7 @@ from http_feeds_spark.operators.components import (
     connected_components,
     incremental_components,
 )
-from http_feeds_spark.stores import committed, parquet_exists
+from http_feeds_spark.stores import committed_dirs, hadoop_fs, numbered_dirs, parquet_exists
 
 BANDS_DIR = "bands"
 SHINGLES_DIR = "shingles"
@@ -83,34 +83,12 @@ def _paths(index_root: str) -> tuple[str, str, str]:
 # AFTER the new one is fully committed (a crash during cleanup leaves
 # extra complete epochs, and max-complete still wins). The next fold
 # always targets latest_complete+1, so a torn attempt is overwritten in
-# place on retry. Epoch listing/cleanup goes through the Hadoop
-# FileSystem API — works on any Spark-supported store, like the parquet
-# probes in stores.py.
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm_path
-
-
-def _complete_epochs(spark: SparkSession, asg_root: str) -> list[tuple[int, str]]:
-    """(epoch, path) of every _SUCCESS-committed epoch dir, ascending."""
-    fs, root = _hadoop_path(spark, asg_root)
-    if not fs.exists(root):
-        return []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.isdigit():
-            marker = spark._jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out.append((int(name), st.getPath().toString()))
-    return sorted(out)
+# place on retry. Epoch listing and cleanup are stores.committed_dirs and
+# stores.numbered_dirs.
 
 
 def _read_assignment_or_none(spark: SparkSession, asg_root: str) -> DataFrame | None:
-    epochs = _complete_epochs(spark, asg_root)
+    epochs = committed_dirs(spark, asg_root)
     return spark.read.parquet(epochs[-1][1]) if epochs else None
 
 
@@ -123,19 +101,15 @@ ASSIGNMENT_KEEP_EPOCHS = 2
 
 
 def _write_assignment(spark: SparkSession, asg_root: str, asg: DataFrame) -> None:
-    epochs = _complete_epochs(spark, asg_root)
+    epochs = committed_dirs(spark, asg_root)
     new = (epochs[-1][0] + 1) if epochs else 0
     # overwrite reclaims a torn earlier attempt at this same epoch number
     asg.write.mode("overwrite").parquet(f"{asg_root}/{new:06d}")
-    fs, root = _hadoop_path(spark, asg_root)
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.isdigit()
-            and int(name) <= new - ASSIGNMENT_KEEP_EPOCHS
-        ):
-            fs.delete(st.getPath(), True)
+    # the cleanup reaches torn epochs too, hence the uncommitted walk
+    for n, path in numbered_dirs(spark, asg_root):
+        if n <= new - ASSIGNMENT_KEEP_EPOCHS:
+            fs, p = hadoop_fs(spark, path)
+            fs.delete(p, True)
 
 
 def read_assignment_epoch(spark: SparkSession, index_root: str, epoch: int) -> DataFrame:
@@ -145,20 +119,13 @@ def read_assignment_epoch(spark: SparkSession, index_root: str, epoch: int) -> D
     folds; reading one raises with the remedy rather than silently
     serving a newer clustering."""
     _, _, asg_path = _paths(index_root)
-    have = dict(_complete_epochs(spark, asg_path))
+    have = dict(committed_dirs(spark, asg_path))
     if epoch not in have:
         raise ValueError(
             f"assignment epoch {epoch} at {index_root} is outside the "
             f"retention window (have {sorted(have)}); pin a newer epoch"
         )
     return spark.read.parquet(have[epoch])
-
-
-# store probing shared with operators/ann_index.py — see stores.py for
-# why a definitive-absent-only False matters here (a fold that mistakes
-# a transient read error for "no index yet" would skip the idempotence
-# anti-join and destroy prior state)
-_exists = parquet_exists
 
 
 def _shingle_batch(docs: DataFrame, analyzer: str = "standard") -> DataFrame:
@@ -189,7 +156,7 @@ def store_analyzer(spark: SparkSession, index_root: str) -> str | None:
     if parquet_exists(spark, meta):
         row = spark.read.parquet(meta).collect()[0]
         return str(row.analyzer)
-    if _exists(spark, f"{root}/{SHINGLES_DIR}"):
+    if parquet_exists(spark, f"{root}/{SHINGLES_DIR}"):
         return "whitespace_lower"  # legacy store, pre-analyzer tokenization
     return None
 
@@ -231,7 +198,7 @@ def fold_batch(
             "store to change analyzers"
         )
 
-    if _exists(spark, shingles_path):
+    if parquet_exists(spark, shingles_path):
         store = spark.read.parquet(shingles_path)
         if "bucket" not in store.columns:
             # a pre-bucketing store: appending bucket=N subdirs next to
@@ -249,7 +216,7 @@ def fold_batch(
     sig = mh.minhash_signature_cols(sh_new, "shingles", "doc_id", k=MINHASH_K)
     new_bands = mh.band_rows(sig, "doc_id", bands=LSH_BANDS, rows=LSH_ROWS).localCheckpoint()
 
-    if _exists(spark, bands_path):
+    if parquet_exists(spark, bands_path):
         all_bands = (
             spark.read.parquet(bands_path).drop("bucket").unionByName(new_bands)
         )
@@ -348,8 +315,8 @@ def migrate_legacy_store(spark: SparkSession, index_root: str) -> dict:
     out: dict[str, int] = {}
     for store in (bands_path, shingles_path):
         stage = store.rstrip("/") + "__migrate_stage"
-        fs, jstage = _hadoop_path(spark, stage)
-        _, jlive = _hadoop_path(spark, store)
+        fs, jstage = hadoop_fs(spark, stage)
+        _, jlive = hadoop_fs(spark, store)
         # merge-on-resume, not restore-only-if-missing: a fold between a
         # torn swap and this resume recreates the live dir (it cannot
         # see the store), and discarding the stage would lose every
@@ -359,7 +326,7 @@ def migrate_legacy_store(spark: SparkSession, index_root: str) -> dict:
             rewrite_partitioned_store(
                 spark, store, "bucket", collapse_duplicates=True
             )
-        if not _exists(spark, store):
+        if not parquet_exists(spark, store):
             continue
         live = spark.read.parquet(store)
         if "bucket" in live.columns:
@@ -392,7 +359,7 @@ def compact_store(spark: SparkSession, index_root: str) -> dict:
     bands_path, shingles_path, _ = _paths(index_root)
     out: dict = {}
     for store in (bands_path, shingles_path):
-        if _exists(spark, store) and "bucket" in spark.read.parquet(store).columns:
+        if parquet_exists(spark, store) and "bucket" in spark.read.parquet(store).columns:
             out[store.rsplit("/", 1)[-1]] = rewrite_partitioned_store(
                 spark, store, "bucket"
             )
@@ -448,7 +415,7 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
     bands_path, shingles_path, asg_path = _paths(index_root)
     removed = 0
     for store in (bands_path, shingles_path):
-        if _exists(spark, store):
+        if parquet_exists(spark, store):
             removed += erasure.purge_partitioned_store(
                 spark, store, erased, "doc_id", "bucket"
             )

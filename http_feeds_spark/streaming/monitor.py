@@ -73,7 +73,7 @@ from pyspark.sql import functions as F
 
 from http_feeds_spark.functions import text as tx
 from http_feeds_spark.operators import drift
-from http_feeds_spark.stores import committed, hadoop_fs
+from http_feeds_spark.stores import committed, committed_dirs, hadoop_fs, numbered_dirs
 
 STATS_DIR = "stats"
 WORDS_DIR = "words"
@@ -137,43 +137,22 @@ def _latest_manifest(
     """(gen, keep_id, covered raw ids) of the highest _SUCCESS-committed
     compaction manifest, or None. A torn manifest has no marker and is
     invisible — the commit point is atomic by construction."""
-    fs, man_root = hadoop_fs(spark, f"{root}/{MANIFEST_DIR}")
-    if not fs.exists(man_root):
-        return None
-    gens = []
-    for st in fs.listStatus(man_root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.isdigit():
-            if committed(spark, st.getPath().toString()):
-                gens.append(int(name))
+    gens = committed_dirs(spark, f"{root}/{MANIFEST_DIR}")
     if not gens:
         return None
-    gen = max(gens)
-    row = spark.read.parquet(f"{root}/{MANIFEST_DIR}/{gen:06d}").collect()[0]
+    gen, path = gens[-1]
+    row = spark.read.parquet(path).collect()[0]
     return gen, int(row.keep_id), {int(b) for b in row.covered}
-
-
-def _raw_ids(spark: SparkSession, root: str) -> list[int]:
-    """Every _SUCCESS-committed raw ``batch=<id>`` dir (torn folds are
-    invisible until their replay rewrites them)."""
-    fs, stats_root = hadoop_fs(spark, f"{root}/{STATS_DIR}")
-    if not fs.exists(stats_root):
-        return []
-    out = []
-    for st in fs.listStatus(stats_root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch=") and name[6:].isdigit():
-            if committed(spark, st.getPath().toString()):
-                out.append(int(name[6:]))
-    return sorted(out)
 
 
 def _view(
     spark: SparkSession, root: str
 ) -> tuple[list[int], tuple[int, int, set[int]] | None]:
-    """(exposed raw batch ids, latest manifest or None)."""
+    """(exposed raw batch ids, latest manifest or None). Raw ids are the
+    committed ``stats/batch=<id>`` dirs: a torn fold is invisible until
+    its replay rewrites it."""
     man = _latest_manifest(spark, root)
-    raw = _raw_ids(spark, root)
+    raw = [b for b, _ in committed_dirs(spark, f"{root}/{STATS_DIR}", "batch=")]
     if man is None:
         return raw, None
     _, _, covered = man
@@ -371,13 +350,11 @@ def vacuum(spark: SparkSession, monitor_root: str) -> int:
                 fs.delete(p, True)
                 removed += 1
     for parent in (MERGED_DIR, MANIFEST_DIR):
-        _, proot = hadoop_fs(spark, f"{root}/{parent}")
-        if not fs.exists(proot):
-            continue
-        for st in fs.listStatus(proot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.isdigit() and int(name) < gen:
-                fs.delete(st.getPath(), True)
+        # merged/<gen> dirs carry no marker of their own: walk them all
+        for g, path in numbered_dirs(spark, f"{root}/{parent}"):
+            if g < gen:
+                _, p = hadoop_fs(spark, path)
+                fs.delete(p, True)
                 removed += 1
     return removed
 

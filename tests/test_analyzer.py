@@ -393,6 +393,7 @@ def test_dedup_legacy_store_reads_as_whitespace_lower(spark, tmp_path):
     """A store with shingles but no analyzer meta is pre-r9: it shingled
     under lower + single-space split, and new folds must keep doing so —
     a mixed-case near-duplicate of a stored doc must still pair with it."""
+    from http_feeds_spark.stores import hadoop_fs
     from http_feeds_spark.streaming import dedup as sd
 
     root = str(tmp_path / "ddl")
@@ -401,7 +402,7 @@ def test_dedup_legacy_store_reads_as_whitespace_lower(spark, tmp_path):
     )
     sd.fold_batch(spark, base, root, analyzer="whitespace_lower")
     # simulate the legacy layout: drop the analyzer meta
-    fs, p = sd._hadoop_path(spark, f"{root}/{sd.ANALYZER_DIR}")
+    fs, p = hadoop_fs(spark, f"{root}/{sd.ANALYZER_DIR}")
     fs.delete(p, True)
     assert sd.store_analyzer(spark, root) == "whitespace_lower"
     dup = spark.createDataFrame(

@@ -212,6 +212,23 @@ def test_purge_torn_swap_resumes(spark, sf_dir, tmp_path):
     assert not os.path.exists(stage_root)
     assert erasure.erased_ids(spark, root) is None
 
+    # the same torn stage with the whole live root gone: the resume
+    # renames the stage in whole, which must end in exactly the staged
+    # rows (what renaming it in partition by partition gives)
+    staged = (
+        spark.read.parquet(corpus_path).where(F.col("cluster") == cluster).localCheckpoint()
+    )
+    staged.write.mode("overwrite").partitionBy("cluster").parquet(stage_root)
+    shutil.rmtree(corpus_path)
+    erased = spark.createDataFrame([(victim,)], "id long")
+    assert erasure.purge_partitioned_store(
+        spark, corpus_path, erased, "vec_id", "cluster", dedup_keys=["vec_id"]
+    ) == 0
+    assert sorted(tuple(r) for r in spark.read.parquet(corpus_path).collect()) == sorted(
+        tuple(r) for r in staged.collect()
+    )
+    assert not os.path.exists(stage_root)
+
 
 def test_dedup_index_erasure_and_purge(spark, tmp_path):
     """Streaming LSH index: an erased doc disappears as a NODE and as a

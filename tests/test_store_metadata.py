@@ -145,3 +145,108 @@ def test_bucketed_batch_lists_on_the_driver(spark, tmp_path):
     df, n_jobs = _jobs(spark, lambda: spark.read.schema(schema).parquet(batch))
     assert n_jobs == 0
     assert df.select("bucket").distinct().count() == ti.N_BUCKETS
+
+
+def _dir(path, success=True):
+    os.makedirs(path)
+    if success:
+        open(f"{path}/_SUCCESS", "w").close()
+
+
+def test_committed_dirs_lists_numbered_committed_dirs_with_zero_jobs(spark, tmp_path):
+    """One listing rule for every derived store: numbered child dirs
+    carrying _SUCCESS, ascending by number, learnt without a Spark job."""
+    from http_feeds_spark.stores import committed_dirs, numbered_dirs
+
+    base = str(tmp_path)
+    _dir(f"{base}/ledger/batch=9")
+    _dir(f"{base}/ledger/batch=10")
+    _dir(f"{base}/ledger/batch=000002")
+    _dir(f"{base}/ledger/batch=000003", success=False)  # torn write
+    _dir(f"{base}/ledger/batch=abc")
+    _dir(f"{base}/ledger/other=4")  # prefix mismatch
+    _dir(f"{base}/ledger/_temporary/0")
+    _dir(f"{base}/gens/000001")
+    _dir(f"{base}/gens/batch=5")  # prefix mismatch for prefix ""
+    open(f"{base}/gens/000002", "w").close()  # a plain file, not a dir
+
+    def names(listing):
+        return [(n, os.path.basename(p)) for n, p in listing]
+
+    (absent, ledger, torn, gens), n_jobs = _jobs(
+        spark,
+        lambda: (
+            committed_dirs(spark, f"{base}/nothing_here", "batch="),
+            committed_dirs(spark, f"{base}/ledger", "batch="),
+            numbered_dirs(spark, f"{base}/ledger", "batch="),
+            committed_dirs(spark, f"{base}/gens"),
+        ),
+    )
+    assert n_jobs == 0
+    assert absent == []
+    assert names(ledger) == [(2, "batch=000002"), (9, "batch=9"), (10, "batch=10")]
+    assert names(torn) == [
+        (2, "batch=000002"), (3, "batch=000003"), (9, "batch=9"), (10, "batch=10")
+    ]
+    assert names(gens) == [(1, "000001")]
+
+
+def test_memo_is_bounded_session_bound_stamped_and_forgettable(spark, tmp_path):
+    """The one metadata memo: at most _MEMO_MAX entries, a hit only for
+    the session that built it and only while its stamp paths are
+    untouched, absence never cached, forget drops the entry."""
+    from http_feeds_spark import stores
+
+    loads = []
+
+    def load(value):
+        def f():
+            loads.append(value)
+            return value
+        return f
+
+    for i in range(stores._MEMO_MAX + 10):
+        stores.memo(spark, f"{tmp_path}/flood/{i}", (), load(i))
+    assert len(stores._MEMO) <= stores._MEMO_MAX
+
+    stamp_dir = str(tmp_path / "stamped")
+    os.makedirs(stamp_dir)
+    key = f"{tmp_path}/key"
+    loads.clear()
+    assert stores.memo(spark, key, (stamp_dir,), load("a")) == "a"
+    assert stores.memo(spark, key, (stamp_dir,), load("b")) == "a"  # hit
+    assert stores.memo(spark.newSession(), key, (stamp_dir,), load("c")) == "c"
+    assert stores.memo(spark, key, (stamp_dir,), load("d")) == "d"  # rebuilt
+    t = os.stat(stamp_dir).st_mtime + 5
+    os.utime(stamp_dir, (t, t))
+    assert stores.memo(spark, key, (stamp_dir,), load("e")) == "e"
+    assert stores.memo(spark, key, (stamp_dir,), load("f")) == "e"
+    stores.forget(key)
+    assert stores.memo(spark, key, (stamp_dir,), load("g")) == "g"
+    assert loads == ["a", "c", "d", "e", "g"]
+
+    absent = f"{tmp_path}/absent"
+    assert stores.memo(spark, absent, (), load(None)) is None
+    assert stores.memo(spark, absent, (), load("h")) == "h"
+    assert loads[-2:] == [None, "h"]
+
+
+def test_fixed_schema_metadata_reads_name_their_schema(spark, tmp_path):
+    """The erase ledger and the text-index compaction manifests have one
+    written schema each, so their reads name it: building the erased-id
+    frame runs no job, and resolving a manifest runs only its collect."""
+    from http_feeds_spark.operators import erasure
+
+    root = str(tmp_path / "store")
+    erasure.erase_ids(spark, root, spark.createDataFrame([(7,), (3,)], "id long"))
+    erased, n_jobs = _jobs(spark, lambda: erasure.erased_ids(spark, root))
+    assert n_jobs == 0
+    assert erased.columns == ["id"]
+    assert sorted(r.id for r in erased.collect()) == [3, 7]
+
+    spark.createDataFrame([(4, [1, 2])], "new_batch int, sources array<int>").coalesce(
+        1
+    ).write.parquet(f"{root}/{ti.COMPACTION_DIR}/000000")
+    manifests, n_jobs = _jobs(spark, lambda: ti._manifests(spark, root))
+    assert n_jobs == 1
+    assert manifests == [(0, 4, [1, 2])]
