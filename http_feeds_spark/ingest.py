@@ -44,10 +44,13 @@ to live subjects, not feed history (README.md:184).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from http_feeds_spark.operators import feed as ops
+from http_feeds_spark.session import job_tag, run_concurrently
 from http_feeds_spark.sources import http_feed
 from http_feeds_spark.stores import data_file_stats, hadoop_fs, or_none, parquet_exists
 
@@ -591,6 +594,28 @@ def run_platform(
     cross-component transaction to tear. Call it on a schedule and the
     platform follows the feed.
 
+    Stages. The components that only read what the others write run
+    side by side, one thread each (``session.run_concurrently``):
+
+    1. landing (with its compaction), alone;
+    2. every enabled fold at once: text, dedup, monitor, ANN, PQ, media.
+       They all read the landing zone, which nothing writes until the
+       last of them returns — the barrier — so every store's count
+       (``indexed_docs``, ...) is taken before any erasure;
+    3. erasure: the erase set is read once, then each store's
+       ``erase_ids`` + purge run at once (erasure.propagate_erasure),
+       followed by the optional cluster rebuild;
+    4. retirement, maintenance, epochs and fsck, one after another.
+
+    A failure inside a concurrent stage does not stop the stage: the
+    other components run to their end and commit their cursors or
+    purges, then the first failure (in the order above) is raised, and
+    no later stage runs. The next call resumes every component from its
+    own cursor. Every job of the wave carries the job tag
+    ``platform:<component>`` (``session.job_tag``) and each store's
+    erasure jobs also ``erasure:<store>``, so a component's jobs can be
+    told apart in the event log although their spans overlap.
+
     Erasure scope: the monitor holds AGGREGATES (counts, unigram count
     frames, HLL sketches), not subject rows — like k-means centroids,
     they are outside per-subject erasure; the raw landing zone's story
@@ -622,77 +647,79 @@ def run_platform(
     root = platform_root.rstrip("/")
     land = f"{root}/landing"
     out: dict = {"platform_root": platform_root}
-    out["landing"] = run(spark, url, land, compact=compact)
+    with job_tag(spark, "platform:landing"):
+        out["landing"] = run(spark, url, land, compact=compact)
     kw = dict(doc_id_field=doc_id_field, text_field=text_field)
-    if text_index:
-        out["text_index"] = run_text_index(spark, land, f"{root}/text_index", **kw)
-    if dedup_index:
-        out["dedup_index"] = run_dedup_index(spark, land, f"{root}/dedup_index", **kw)
-    if monitor:
-        out["monitor"] = run_monitor(spark, land, f"{root}/monitor", **kw)
     vkw = dict(id_field=doc_id_field, vec_field=vec_field)
-    if ann_index:
-        out["ann_index"] = run_ann_index(spark, land, f"{root}/ann_index", **vkw)
-    if pq_index:
-        out["pq_index"] = run_pq_index(spark, land, f"{root}/pq_index", **vkw)
-    if media_index:
-        out["media_index"] = run_media_index(
-            spark,
-            land,
-            f"{root}/media_index",
-            doc_id_field=doc_id_field,
-            payload_field=payload_field,
+    mkw = dict(doc_id_field=doc_id_field, payload_field=payload_field)
+    folds = [
+        (name, partial(fold, spark, land, f"{root}/{name}", **args))
+        for name, enabled, fold, args in (
+            ("text_index", text_index, run_text_index, kw),
+            ("dedup_index", dedup_index, run_dedup_index, kw),
+            ("monitor", monitor, run_monitor, kw),
+            ("ann_index", ann_index, run_ann_index, vkw),
+            ("pq_index", pq_index, run_pq_index, vkw),
+            ("media_index", media_index, run_media_index, mkw),
         )
+        if enabled
+    ]
+    results = run_concurrently(spark, [(f"platform:{name}", fold) for name, fold in folds])
+    out.update(zip([name for name, _ in folds], results))
     if erasure:
-        out["erasure"] = run_erasure(
-            spark,
-            land,
-            text_index_root=f"{root}/text_index" if text_index else None,
-            dedup_index_root=f"{root}/dedup_index" if dedup_index else None,
-            ann_index_root=f"{root}/ann_index" if ann_index else None,
-            pq_index_root=f"{root}/pq_index" if pq_index else None,
-            media_index_root=f"{root}/media_index" if media_index else None,
-            purge=purge,
-        )
-        if (
-            rebuild_clusters_after_purge
-            and out["erasure"].get("dedup_index_purged", 0) > 0
-        ):
-            # cluster hygiene after a purge: the incremental closure
-            # only ever ADDS edges, so a purged bridge doc leaves its
-            # merges behind (documented). Opt-in because the rebuild is
-            # a full closure over the stored indexes — right after
-            # erasures that matter, wasteful on every catch-up.
-            from http_feeds_spark.streaming import dedup as sd
+        with job_tag(spark, "platform:erasure"):
+            out["erasure"] = run_erasure(
+                spark,
+                land,
+                text_index_root=f"{root}/text_index" if text_index else None,
+                dedup_index_root=f"{root}/dedup_index" if dedup_index else None,
+                ann_index_root=f"{root}/ann_index" if ann_index else None,
+                pq_index_root=f"{root}/pq_index" if pq_index else None,
+                media_index_root=f"{root}/media_index" if media_index else None,
+                purge=purge,
+            )
+            if (
+                rebuild_clusters_after_purge
+                and out["erasure"].get("dedup_index_purged", 0) > 0
+            ):
+                # cluster hygiene after a purge: the incremental closure
+                # only ever ADDS edges, so a purged bridge doc leaves its
+                # merges behind (documented). Opt-in because the rebuild is
+                # a full closure over the stored indexes — right after
+                # erasures that matter, wasteful on every catch-up.
+                from http_feeds_spark.streaming import dedup as sd
 
-            sd.rebuild_assignment(spark, f"{root}/dedup_index")
-            out["erasure"]["dedup_clusters_rebuilt"] = True
+                sd.rebuild_assignment(spark, f"{root}/dedup_index")
+                out["erasure"]["dedup_clusters_rebuilt"] = True
     if retire_below_seq is not None and out["landing"]["raw_rows"]:
         # the spec's retention story from the one-call API: raw ages out
         # below the caller's horizon (the minimum cursor across consumers
         # bootstrapping from raw), compacted serves history. Last among
         # the readers of raw: a DELETE it ages out has reached the stores
-        out["landing"]["retention"] = retire_landing_history(
-            spark, land, horizon_seq=retire_below_seq
-        )
+        with job_tag(spark, "platform:retention"):
+            out["landing"]["retention"] = retire_landing_history(
+                spark, land, horizon_seq=retire_below_seq
+            )
     if compact_after is not None:
-        out["maintenance"] = run_maintenance(
-            spark,
-            platform_root,
-            text_index=text_index,
-            monitor=monitor,
-            dedup_index=dedup_index,
-            ann_index=ann_index,
-            pq_index=pq_index,
-            media_index=media_index,
-            compact_after=compact_after,
-        )
+        with job_tag(spark, "platform:maintenance"):
+            out["maintenance"] = run_maintenance(
+                spark,
+                platform_root,
+                text_index=text_index,
+                monitor=monitor,
+                dedup_index=dedup_index,
+                ann_index=ann_index,
+                pq_index=pq_index,
+                media_index=media_index,
+                compact_after=compact_after,
+            )
     if record_epochs:
         # AFTER maintenance, so the recorded frontier names the
         # post-compaction batch/unit ids a pinned reader can still open
         from http_feeds_spark import epochs
 
-        out["epoch"] = epochs.record_epoch(spark, platform_root)
+        with job_tag(spark, "platform:epoch"):
+            out["epoch"] = epochs.record_epoch(spark, platform_root)
     if verify:
         # one-call audit LAST (r11): the full fsck_platform report rides
         # the summary, and a hard violation — store corruption no retry
@@ -701,7 +728,8 @@ def run_platform(
         # crash-resumable protocols) pass; they are in the report.
         from http_feeds_spark.operators import fsck
 
-        out["fsck"] = fsck.fsck_platform(spark, platform_root)
+        with job_tag(spark, "platform:fsck"):
+            out["fsck"] = fsck.fsck_platform(spark, platform_root)
         if not out["fsck"]["clean"]:
             raise PlatformVerifyError(out)
     return out

@@ -48,10 +48,13 @@ longer carry it.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from http_feeds_spark import stores
+from http_feeds_spark.session import run_concurrently
 from http_feeds_spark.stores import hadoop_fs
 
 ERASED_DIR = "erased"
@@ -252,10 +255,12 @@ def propagate_erasure(
     """One erasure request fanned out to every derived store: commit the
     ids into each store's ledger (logical — the invariant holds from
     here on), then optionally run each store's physical purge. Stores
-    are independent: a purge failure in one leaves its ledger set (its
-    readers keep filtering) without blocking the others. Returns
+    are independent and run concurrently, one thread each
+    (``session.run_concurrently``, job tag ``erasure:<store>``): a
+    failure in one leaves its ledger set (its readers keep filtering)
+    while the others still erase, purge and clear theirs; once all have
+    finished, the first failure in the order below is raised. Returns
     per-store counts ({"<store>_erased": n, "<store>_purged": rows})."""
-    out: dict[str, int] = {}
     targets: list[tuple[str, str, object]] = []
     if text_index_root is not None:
         from http_feeds_spark.operators import text_index as ti
@@ -277,8 +282,15 @@ def propagate_erasure(
         from http_feeds_spark.streaming import media as smedia
 
         targets.append(("media_index", media_index_root, smedia.purge_erased))
-    for name, root, purge_fn in targets:
-        out[f"{name}_erased"] = erase_ids(spark, root, ids, id_col=id_col)
+
+    def one_store(name: str, root: str, purge_fn) -> dict[str, int]:
+        res = {f"{name}_erased": erase_ids(spark, root, ids, id_col=id_col)}
         if purge:
-            out[f"{name}_purged"] = purge_fn(spark, root)
+            res[f"{name}_purged"] = purge_fn(spark, root)
+        return res
+
+    out: dict[str, int] = {}
+    thunks = [(f"erasure:{t[0]}", partial(one_store, *t)) for t in targets]
+    for res in run_concurrently(spark, thunks):
+        out.update(res)
     return out

@@ -953,6 +953,7 @@ def _replace_batches(
     index_root: str,
     source_nos: list[int],
     frame: DataFrame,
+    analyzer: str | None = None,
 ) -> int:
     """Atomically replace the ``source_nos`` batch dirs with ``frame``
     as ONE new batch dir (manifest-first protocol):
@@ -964,7 +965,8 @@ def _replace_batches(
     2. write the frame to ``postings/batch=<new>`` — its _SUCCESS
        marker ATOMICALLY activates the manifest: sources hidden and
        merge visible in the same instant, so no reader ever sees both;
-    3. recompute the derived stores, then vacuum the hidden sources.
+    3. recompute the derived stores (carrying ``analyzer`` forward,
+       the current meta's when None), then vacuum the hidden sources.
 
     A crash between 2 and 3 leaves a stale meta fingerprint (search
     heals, module docstring) and hidden-garbage dirs (next vacuum).
@@ -990,7 +992,9 @@ def _replace_batches(
         .parquet(f"{post_path}/batch={new_no:06d}")
     )  # commit point: this _SUCCESS swaps sources -> merge atomically
     forget(index_root)  # visibility flipped at the commit
-    _write_derived(spark, index_root, len(_complete_batches(spark, post_path)))
+    _write_derived(
+        spark, index_root, len(_complete_batches(spark, post_path)), analyzer
+    )
     vacuum_postings(spark, index_root)
     forget(index_root)
     return new_no
@@ -1082,13 +1086,16 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
     """Physically remove every posting of the ledger's erased doc ids
     (operators/erasure.py tier 2), then clear exactly the ledger batches
     processed. Touches only the posting batch dirs that actually contain
-    erased docs (ids-only semi-join), rewriting them through the same
-    manifest-first _replace_batches protocol as compaction — so a crash
-    at any point leaves either the originals or the filtered replacement
-    visible, never both, and the still-set ledger keeps every reader
-    filtering (search's heal path also recomputes df/avgdl from the
-    filtered postings) until the rewrite commits. Returns the number of
-    posting rows removed."""
+    erased docs, rewriting them through the same manifest-first
+    _replace_batches protocol as compaction — so a crash at any point
+    leaves either the originals or the filtered replacement visible,
+    never both, and the still-set ledger keeps every reader filtering
+    (search's heal path also recomputes df/avgdl from the filtered
+    postings) until the rewrite commits. One grouped aggregate per
+    ``batch`` (rows, erased rows) names the affected batches and both
+    counts; the rewrite recomputes the survivors from the same source
+    batches, which stay immutable until the vacuum after the commit.
+    Returns the number of posting rows removed."""
     ledger_nos, erased = erasure.ledger_snapshot(spark, index_root)
     if erased is None:
         return 0
@@ -1100,31 +1107,42 @@ def purge_erased(spark: SparkSession, index_root: str) -> int:
             *[p for _, p in visible]
         )
         key = erased.withColumnRenamed("id", "doc_id")
-        affected = sorted(
-            r.batch
-            for r in post.join(key, "doc_id", "semi").select("batch").distinct().collect()
+        per_batch = (
+            post.join(key.withColumn("erased", F.lit(1)), "doc_id", "left")
+            .groupBy("batch")
+            .agg(F.count(F.lit(1)).alias("rows"), F.count("erased").alias("erased"))
+            .where(F.col("erased") > 0)
+            .collect()
         )
-        if affected:
-            sub = post.where(F.col("batch").isin(affected))
-            removed = int(sub.join(key, "doc_id", "semi").count())
-            kept = sub.join(key, "doc_id", "left_anti").localCheckpoint()
+        if per_batch:
+            affected = sorted(r.batch for r in per_batch)
+            removed = sum(int(r.erased) for r in per_batch)
+            kept_rows = sum(int(r.rows) for r in per_batch) - removed
+            # the analyzer SURVIVES the purge: the store still exists,
+            # and its next upsert must tokenize like the one this store
+            # was created with. Read here (a pre-analyzer meta reads as
+            # null: "whitespace"), so the rewrite below does not reload
+            # the frontier just to carry it forward
+            meta = spark.read.schema("analyzer string").parquet(meta_path).first()
+            analyzer = (meta and meta.analyzer) or "whitespace"
             survivors_elsewhere = [no for no, _ in visible if no not in affected]
-            if kept.count() > 0:
-                _replace_batches(spark, index_root, affected, kept)
+            if kept_rows > 0:
+                kept = post.where(F.col("batch").isin(affected)).join(
+                    key, "doc_id", "left_anti"
+                )
+                _replace_batches(spark, index_root, affected, kept, analyzer)
             elif survivors_elsewhere:
                 # every doc in the affected batches is erased: fold the
                 # (empty) remainder into the lowest surviving batch so
                 # the replacement dir is readable parquet
                 donor = survivors_elsewhere[0]
                 donor_frame = spark.read.parquet(f"{post_path}/batch={donor:06d}")
-                _replace_batches(spark, index_root, affected + [donor], donor_frame)
+                _replace_batches(
+                    spark, index_root, affected + [donor], donor_frame, analyzer
+                )
             else:
                 # the whole index is erased: drop every store and stamp
-                # an empty meta — search answers every query with 0 hits.
-                # The analyzer SURVIVES the purge (read before the wipe):
-                # the store still exists, and its next upsert must
-                # tokenize like the one this store was created with.
-                analyzer = index_analyzer(spark, index_root)
+                # an empty meta — search answers every query with 0 hits
                 fs, _ = hadoop_fs(spark, index_root)
                 for no, p in visible:
                     _, jp = hadoop_fs(spark, p)

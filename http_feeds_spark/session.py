@@ -16,6 +16,8 @@ Key posture for 100 TB:
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -88,6 +90,60 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def job_tag(spark: SparkSession, tag: str):
+    """Every Spark job this thread submits inside the block carries
+    `tag`: the JVM's ``statusTracker().getJobIdsForTag(tag)`` lists it
+    and its event-log ``spark.job.tags`` property names it, so one
+    component's jobs stay attributable while components overlap in
+    time. Adds no job."""
+    sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
+
+
+def run_concurrently(spark: SparkSession, named_thunks: list) -> list:
+    """Run each ``(name, thunk)`` of `named_thunks` on a thread of its
+    own, under the job tag `name`, and wait for all of them. Every thunk
+    runs to its end whatever the others do; the results come back in
+    the order given; if any thunk raised, the first failure in that
+    order is raised once all have finished. Each thread starts with the
+    caller's Spark local properties (``inheritable_thread_target``), so
+    the caller's job group, tags and description reach every thunk's
+    jobs and ``cancelJobGroup`` still cancels them."""
+    from pyspark import inheritable_thread_target
+
+    results: list = [None] * len(named_thunks)
+    errors: list = [None] * len(named_thunks)
+
+    def body(i: int, name: str, thunk) -> None:
+        try:
+            with job_tag(spark, name):
+                results[i] = thunk()
+        except BaseException as e:  # re-raised below, in the caller
+            errors[i] = e
+
+    threads = [
+        # one wrap per thread: each copies the caller's properties, so a
+        # thread's own tag never reaches the others
+        threading.Thread(
+            target=inheritable_thread_target(spark)(body), args=(i, name, thunk), name=name
+        )
+        for i, (name, thunk) in enumerate(named_thunks)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
 
 
 def scaled_shuffle_partitions(input_bytes: int, target_partition_bytes: int = 128 * 1024 * 1024) -> int:

@@ -22,6 +22,7 @@ them. This module owns that rule once:
 
 from __future__ import annotations
 
+import threading
 from collections import OrderedDict
 
 from pyspark.sql import SparkSession
@@ -220,6 +221,9 @@ def require_lossless_cast(incoming, store, what: str) -> None:
 #   the file-set swap itself, whichever module called it.
 _MEMO: OrderedDict[str, tuple] = OrderedDict()
 _MEMO_MAX = 64
+# the platform's components run on threads of their own
+# (session.run_concurrently); `load` runs outside the lock
+_MEMO_LOCK = threading.Lock()
 
 
 def memo(spark: SparkSession, key: str, stamp_paths, load):
@@ -229,25 +233,28 @@ def memo(spark: SparkSession, key: str, stamp_paths, load):
     least recently used entry goes once ``_MEMO_MAX`` are held."""
     key = key.rstrip("/")
     stamp = tuple(modification_stamp(spark, p) for p in stamp_paths)
-    hit = _MEMO.get(key)
-    if hit is not None and hit[0] is spark and hit[1] == stamp:
-        _MEMO.move_to_end(key)
-        return hit[2]
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+        if hit is not None and hit[0] is spark and hit[1] == stamp:
+            _MEMO.move_to_end(key)
+            return hit[2]
     value = load()
     if value is None:
-        _MEMO.pop(key, None)
+        forget(key)
         return None
-    _MEMO[key] = (spark, stamp, value)
-    _MEMO.move_to_end(key)
-    while len(_MEMO) > _MEMO_MAX:
-        _MEMO.popitem(last=False)
+    with _MEMO_LOCK:
+        _MEMO[key] = (spark, stamp, value)
+        _MEMO.move_to_end(key)
+        while len(_MEMO) > _MEMO_MAX:
+            _MEMO.popitem(last=False)
     return value
 
 
 def forget(key: str) -> None:
     """Drop the memo entry for `key`: called by every path that writes,
     rewrites or deletes what that entry was read from."""
-    _MEMO.pop(key.rstrip("/"), None)
+    with _MEMO_LOCK:
+        _MEMO.pop(key.rstrip("/"), None)
 
 
 def cached_scan(spark: SparkSession, store_path: str):

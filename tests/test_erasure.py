@@ -15,6 +15,7 @@ from http_feeds_spark.operators import erasure
 from http_feeds_spark.operators import pq_index as pqi
 from http_feeds_spark.operators import text_index as ti
 from http_feeds_spark.streaming import dedup as sd
+from tests.test_store_metadata import _jobs
 
 TERMS = ["window", "filter", "merge"]
 
@@ -337,6 +338,75 @@ def test_run_erasure_walks_the_feed_once(spark, tmp_path):
         assert out["text_index_erased"] == 2 and out["dedup_index_erased"] == 2
     finally:
         srv.shutdown()
+
+
+def _small_docs(spark, n=8):
+    return spark.createDataFrame(
+        [(i, f"window filter merge common{i} tail{i} words") for i in range(n)],
+        "doc_id long, text string",
+    )
+
+
+def test_text_purge_finds_affected_batches_in_one_aggregate(spark, tmp_path):
+    """One grouped aggregate per batch names the affected batches, the
+    removed rows and the survivors' count, and the rewrite carries the
+    analyzer the purge read: 19 jobs for this purge (31 before, when
+    the affected batches, the removed count and a checkpointed survivor
+    count were three separate actions and the derived-store rewrite
+    reloaded the index frontier). Ids that match no posting (1 of 3
+    here, as after earlier purges) change nothing."""
+    docs = _small_docs(spark)
+    root = str(tmp_path / "ti")
+    ti.build_text_index(spark, docs.where("doc_id < 4"), root, analyzer="standard")
+    ti.upsert_documents(spark, docs.where("doc_id >= 4"), root)
+    erasure.erase_ids(
+        spark, root, spark.createDataFrame([(1,), (100,), (101,)], "id long")
+    )
+    removed, jobs = _jobs(spark, lambda: ti.purge_erased(spark, root))
+    assert removed == 6  # doc 1's six postings
+    assert jobs == 19
+    assert erasure.erased_ids(spark, root) is None
+    assert ti.index_analyzer(spark, root) == "standard"
+    hits = {r.doc_id for r in ti.search(spark, root, ["window"], k=20).collect()}
+    assert hits == {0, 2, 3, 4, 5, 6, 7}
+
+
+@pytest.mark.parametrize("failing", ["text_index", "dedup_index"])
+def test_propagate_erasure_failure_in_one_store_does_not_block_the_others(
+    spark, tmp_path, monkeypatch, failing
+):
+    """Stores are independent: one store's purge raising leaves its
+    ledger set (its readers keep filtering), the other store still
+    erases, purges and clears its ledger, and the failure is raised."""
+    docs = _small_docs(spark, 6)
+    roots = {"text_index": str(tmp_path / "ti"), "dedup_index": str(tmp_path / "sd")}
+    ti.ensure_text_index(spark, docs, roots["text_index"])
+    sd.fold_batch(spark, docs, roots["dedup_index"])
+
+    def boom(spark_, root):
+        raise RuntimeError(f"{failing} purge failed")
+
+    monkeypatch.setattr(ti if failing == "text_index" else sd, "purge_erased", boom)
+    with pytest.raises(RuntimeError, match=f"{failing} purge failed"):
+        erasure.propagate_erasure(
+            spark,
+            spark.createDataFrame([(2,)], "id long"),
+            text_index_root=roots["text_index"],
+            dedup_index_root=roots["dedup_index"],
+            purge=True,
+        )
+    (other,) = set(roots) - {failing}
+    assert erasure.erased_ids(spark, roots[other]) is None
+    assert [r.id for r in erasure.erased_ids(spark, roots[failing]).collect()] == [2]
+    if other == "text_index":
+        hits = {r.doc_id for r in ti.search(spark, roots[other], ["window"], k=10).collect()}
+        assert hits == {0, 1, 3, 4, 5}
+        left = spark.read.option("basePath", f"{roots[other]}/{ti.POSTINGS_DIR}").parquet(
+            f"{roots[other]}/{ti.POSTINGS_DIR}"
+        )
+    else:
+        left = spark.read.parquet(f"{roots[other]}/{sd.SHINGLES_DIR}")
+    assert left.where(F.col("doc_id") == 2).count() == 0
 
 
 @pytest.mark.slow  # >30 s platform-integration (see pytest.ini)

@@ -200,6 +200,71 @@ def test_retire_horizon_past_same_wave_delete_still_erases(spark, feed, tmp_path
     assert hits == {0, 2, 3, 4, 5}
 
 
+@pytest.mark.slow  # >30 s platform-integration (see pytest.ini)
+def test_fold_failure_commits_the_other_folds_and_stops_the_wave(
+    spark, feed, tmp_path, monkeypatch
+):
+    """The folds run side by side: when the dedup fold raises, the text
+    and monitor folds still run to their end and commit their cursors,
+    the wave raises the dedup error before erasure, maintenance and
+    epochs, and the next call reaches the same stores as a wave that
+    never failed. Each component's jobs carry their own job tag."""
+    from http_feeds_spark import epochs
+    from http_feeds_spark.operators import erasure
+
+    state, url = feed
+    _docs(state, range(6))
+    state.append("doc", "1", None, method="DELETE")
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+
+    later = []
+    for module, name in [(ingest, "run_erasure"), (ingest, "run_maintenance"), (epochs, "record_epoch")]:
+        real = getattr(module, name)
+        monkeypatch.setattr(
+            module, name, lambda *a, _n=name, _f=real, **kw: later.append(_n) or _f(*a, **kw)
+        )
+    run_dedup_index = ingest.run_dedup_index
+
+    def dedup_fails(*a, **kw):
+        raise RuntimeError("dedup fold failed")
+
+    monkeypatch.setattr(ingest, "run_dedup_index", dedup_fails)
+    with pytest.raises(RuntimeError, match="dedup fold failed"):
+        ingest.run_platform(spark, url, crashed)
+    assert later == []
+    last = max(r.seq for r in spark.read.parquet(f"{crashed}/landing/raw").collect())
+    for store in ("text_index", "monitor"):
+        assert int(open(f"{crashed}/{store}/{ingest.CURSOR_FILE}").read()) == last
+    assert not os.path.exists(f"{crashed}/dedup_index")
+
+    monkeypatch.setattr(ingest, "run_dedup_index", run_dedup_index)
+    resumed = ingest.run_platform(spark, url, crashed)
+    assert later == ["run_erasure", "run_maintenance", "record_epoch"]
+    reference = ingest.run_platform(spark, url, clean)
+    for key in ("erasure", "maintenance"):
+        assert resumed[key] == reference[key]
+    assert resumed["text_index"]["indexed_docs"] == reference["text_index"]["indexed_docs"] == 6
+    assert resumed["dedup_index"]["indexed_docs"] == reference["dedup_index"]["indexed_docs"]
+    assert resumed["monitor"]["n_docs"] == reference["monitor"]["n_docs"] == 6
+    assert resumed["epoch"]["epoch"] == reference["epoch"]["epoch"] == 0
+    for root in (crashed, clean):
+        hits = {r.doc_id for r in ti.search(spark, f"{root}/text_index", ["window"], k=20).collect()}
+        assert hits == {0, 2, 3, 4, 5}
+        shingled = spark.read.parquet(f"{root}/dedup_index/{sd.SHINGLES_DIR}")
+        assert {r.doc_id for r in shingled.select("doc_id").distinct().collect()} == hits
+        for store in ("text_index", "dedup_index"):
+            assert erasure.erased_ids(spark, f"{root}/{store}") is None
+
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    tagged = {
+        c: set(tracker.getJobIdsForTag(f"platform:{c}"))
+        for c in ("landing", "text_index", "dedup_index", "monitor", "erasure")
+    }
+    assert all(tagged.values())
+    assert not tagged["text_index"] & tagged["dedup_index"]
+    assert not tagged["text_index"] & tagged["erasure"]
+
+
 def test_monitor_units_and_epochs_hold_uuid6_sized_positions(spark, tmp_path):
     """UUIDv6 positions are 60-bit timestamps: the monitor unit keyed by
     such a cursor, the epoch that records it and the compaction manifest

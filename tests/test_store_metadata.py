@@ -231,6 +231,50 @@ def test_memo_is_bounded_session_bound_stamped_and_forgettable(spark, tmp_path):
     assert loads[-2:] == [None, "h"]
 
 
+def test_memo_survives_concurrent_memo_and_forget(tmp_path):
+    """The platform's components share the memo from threads of their
+    own: threads hammering memo and forget on overlapping keys raise
+    nothing (an unlocked get followed by move_to_end raises KeyError
+    when another thread pops the key in between), every call returns
+    its key's value, and the cap still holds."""
+    import random
+    import sys
+    import threading
+
+    from http_feeds_spark import stores
+
+    owner = object()  # stands in for the session: no stamp paths, no JVM
+    keys = [f"{tmp_path}/hammer/{i}" for i in range(stores._MEMO_MAX + 8)]
+    errors = []
+
+    def hammer(seed):
+        rnd = random.Random(seed)
+        try:
+            for _ in range(50_000):
+                # mostly a few hot keys, so threads collide on one key
+                k = rnd.choice(keys[:2] if rnd.random() < 0.9 else keys)
+                if rnd.random() < 0.3:
+                    stores.forget(k)
+                elif stores.memo(owner, k, (), lambda k=k: k) != k:
+                    raise AssertionError(f"wrong value for {k}")
+        except BaseException as e:
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(stores._MEMO) <= stores._MEMO_MAX
+
+
 def test_fixed_schema_metadata_reads_name_their_schema(spark, tmp_path):
     """The erase ledger and the text-index compaction manifests have one
     written schema each, so their reads name it: building the erased-id
